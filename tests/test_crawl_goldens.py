@@ -13,10 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from xidel_spark.corpus import fixture_graph, fixture_link_map
+from xidel_spark.crawl.crawler import FrontierCrawler
 from xidel_spark.crawl.engine import (
     crawl_exact,
     crawl_exact_depth_limited,
-    crawl_waves,
     expand_nodedup,
 )
 from xidel_spark.extract.links import extract_kind_text, extract_links
@@ -88,7 +88,7 @@ def test_repetition_on(spark, docs, links):
 
 def test_waves_seen_set_matches_exact(spark, links):
     exact = crawl_exact(spark, links, ["a.xml"])
-    waves = crawl_waves(spark, links, ["a.xml"])
+    waves = FrontierCrawler(spark, links).run(["a.xml"])
     assert {r["url"] for r in exact.seen.collect()} == {r["url"] for r in waves.seen.collect()}
     # per-wave dedup lineage metrics recorded
     assert waves.metrics and all("enqueued" in m for m in waves.metrics)
@@ -121,7 +121,7 @@ def test_depth_limited_replay_guard(spark):
     )
     spark.conf.set("xidel.crawl.maxReplayLinks", "100")
     try:
-        with pytest.raises(ValueError, match="crawl_waves"):
+        with pytest.raises(ValueError, match="FrontierCrawler"):
             crawl_exact_depth_limited(spark, links, ["u0"], max_depth=2)
     finally:
         spark.conf.set("xidel.crawl.maxReplayLinks", "5000000")

@@ -12,7 +12,8 @@ formulations diverge from the true semantics:
 
 import pytest
 
-from xidel_spark.crawl.engine import crawl_exact, crawl_waves, expand_nodedup
+from xidel_spark.crawl.crawler import FrontierCrawler
+from xidel_spark.crawl.engine import crawl_exact, expand_nodedup
 from xidel_spark.crawl.simulator import simulate_crawl
 
 GRAPHS = {
@@ -59,13 +60,31 @@ def test_exact_engine_matches_sequential_oracle(spark, name):
     assert got_depths == sim_depths
 
 
+def bfs_depths(link_map, seeds):
+    depth = dict.fromkeys(seeds, 0)
+    level = list(depth)
+    while level:
+        nxt = []
+        for u in level:
+            for v in link_map.get(u, []):
+                if v not in depth:
+                    depth[v] = depth[u] + 1
+                    nxt.append(v)
+        level = nxt
+    return depth
+
+
 @pytest.mark.parametrize("name", sorted(GRAPHS))
 def test_waves_seen_set_is_reachability(spark, name):
     lm = GRAPHS[name]
     seeds = SEEDS.get(name, ["a"])
     sim = simulate_crawl(lm, seeds, dedup=True)
-    res = crawl_waves(spark, links_df(spark, lm), seeds)
-    assert {r["url"] for r in res.seen.collect()} == sim.seen
+    run = FrontierCrawler(spark, links_df(spark, lm)).run(seeds)
+    assert {r["url"] for r in run.seen.collect()} == sim.seen
+    # visited: each url once, at its BFS distance from the seed set
+    visited = run.visited.collect()
+    assert sorted(r["url"] for r in visited) == sorted(sim.seen)
+    assert {r["url"]: r["depth"] for r in visited} == bfs_depths(lm, seeds)
 
 
 @pytest.mark.parametrize("name", ["deep_shadow", "tef_shape", "multi_seed"])

@@ -46,7 +46,7 @@ def test_output_formats(spark):
 
 
 def test_streaming_continuous_crawl_matches_batch(spark, tmp_path):
-    from xidel_spark.crawl.engine import crawl_waves
+    from xidel_spark.crawl.crawler import FrontierCrawler
     from xidel_spark.streaming.continuous import ContinuousCrawl
 
     rows = [(f"u{i}", k, f"u{(3 * i + k + 1) % 20}") for i in range(20) for k in range(2)]
@@ -55,11 +55,30 @@ def test_streaming_continuous_crawl_matches_batch(spark, tmp_path):
     seeds_dir.mkdir()
     (seeds_dir / "b1.json").write_text('{"url": "u0", "seed_idx": 0}\n')
     (seeds_dir / "b2.json").write_text('{"url": "u1", "seed_idx": 1}\n{"url": "u0", "seed_idx": 2}\n')
-    cc = ContinuousCrawl(spark, links, partition_by_host=False)
+    cc = ContinuousCrawl(spark, links)
     cc.run_from_files(str(seeds_dir))
     stream_seen = {r["url"] for r in cc.seen.collect()}
-    batch = crawl_waves(spark, links, ["u0", "u1"])
+    batch = FrontierCrawler(spark, links).run(["u0", "u1"])
     assert stream_seen == {r["url"] for r in batch.seen.collect()}
+
+
+def test_streaming_cross_batch_dedup(spark):
+    """a later micro-batch must not re-enqueue what earlier batches saw:
+    seeded at x with x→b after a→b→c→d, it enqueues x alone."""
+    from xidel_spark.streaming.continuous import ContinuousCrawl
+
+    links = spark.createDataFrame(
+        [("a", 0, "b"), ("b", 0, "c"), ("c", 0, "d"), ("x", 0, "b")],
+        "src string, idx int, dst string",
+    )
+    cc = ContinuousCrawl(spark, links)
+    cc._process_batch(spark.createDataFrame([("a", 0)], "url string, seed_idx long"), 0)
+    cc._process_batch(spark.createDataFrame([("x", 0)], "url string, seed_idx long"), 1)
+    first, second = cc.batches
+    assert first["enqueued"] == 4
+    assert second["enqueued"] == 1 and second["waves"] == 1
+    assert second["seen_total"] == 5
+    assert sorted(r["url"] for r in cc.seen.collect()) == ["a", "b", "c", "d", "x"]
 
 
 def test_media_plumbing(spark):

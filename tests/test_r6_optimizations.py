@@ -5,6 +5,7 @@ physical plan; these pin that claim at unit scale (the DuckDB gates pin
 it at corpus scale).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 import xidel_spark.crawl.bloom as bl
@@ -69,7 +70,7 @@ def test_minhash_barrier_signatures_match_unshared_form(spark):
     assert all(r[f"sig_{j}"] is None for r in nulls for j in range(4))
 
 
-def test_sized_loop_restores_confs_on_exception(spark):
+def test_sized_loop_restores_confs_on_exception(spark, monkeypatch):
     from xidel_spark.crawl.engine import _sized_loop
 
     parts0 = spark.conf.get("spark.sql.shuffle.partitions")
@@ -84,25 +85,36 @@ def test_sized_loop_restores_confs_on_exception(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
 
-
-def test_crawler_host_partition_auto_equals_forced(spark):
-    """partition_by_host='auto' (off when politeness is off) must leave the
-    crawl results and per-wave metrics identical to the forced layout."""
-    from xidel_spark.crawl.crawler import FrontierCrawler
+    # the crawler sizes every wave through the same context: a layer that
+    # raises mid-crawl (robots, on its 2nd call = wave 1) must still leave
+    # the caller's confs behind
+    import xidel_spark.crawl.crawler as crawler
 
     links = spark.createDataFrame(
-        [(f"http://h{i % 3}.test/p{i}", 0, f"http://h{(i + 1) % 3}.test/p{(i * 7 + 1) % 40}")
-         for i in range(40)],
+        [(f"http://h.test/p{i}", 0, f"http://h.test/p{i + 1}") for i in range(5)],
         "src string, idx int, dst string",
-    ).localCheckpoint(eager=True)
-    seeds = ["http://h0.test/p0", "http://h1.test/p1"]
-    auto = FrontierCrawler(spark, links).run(seeds)
-    forced = FrontierCrawler(spark, links, partition_by_host=True).run(seeds)
-    assert auto.waves == forced.waves
-    assert [m["enqueued"] for m in auto.metrics] == [m["enqueued"] for m in forced.metrics]
-    a = auto.seen.select("url")
-    f = forced.seen.select("url")
-    assert a.exceptAll(f).count() == 0 and f.exceptAll(a).count() == 0
+    )
+    rules = spark.createDataFrame([("h.test", "/", True)], "host string, prefix string, allow boolean")
+    calls = []
+    apply_robots = crawler.apply_robots
+
+    def failing_robots(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+            raise RuntimeError("robots down")
+        return apply_robots(*a, **kw)
+
+    monkeypatch.setattr(crawler, "apply_robots", failing_robots)
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        with pytest.raises(RuntimeError, match="robots down"):
+            crawler.FrontierCrawler(spark, links, robots_rules=rules).run(["http://h.test/p0"])
+        assert len(calls) == 2
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts0)
 
 
 def test_link_extraction_filter_before_sort_unsorted_spans(spark):

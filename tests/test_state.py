@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from xidel_spark.crawl.bloom import build_bloom, split_candidates
 from xidel_spark.crawl.checkpoint import CrawlStateStore
 from xidel_spark.crawl.crawler import FrontierCrawler
-from xidel_spark.crawl.engine import crawl_waves
+from xidel_spark.crawl.engine import crawl_exact
 from xidel_spark.corpus import fixture_graph
 from xidel_spark.extract.links import extract_links
 
@@ -83,28 +83,8 @@ def test_bloom_never_driver_resident(spark):
 
 def test_crawler_matches_engine_seen(spark, cyclic_links):
     run = FrontierCrawler(spark, cyclic_links).run(SEEDS)
-    ref = crawl_waves(spark, cyclic_links, SEEDS)
+    ref = crawl_exact(spark, cyclic_links, SEEDS)
     assert {r["url"] for r in run.seen.collect()} == {r["url"] for r in ref.seen.collect()}
-
-
-def test_crawler_parquet_checkpoint_equal(spark, cyclic_links, tmp_path):
-    """xidel.crawl.checkpointImpl=parquet (the RDD-free tmpfs round-trip,
-    BASELINE.md wave-checkpoint microbench) is result-identical to the
-    default localCheckpoint+stats-reset path."""
-    plain = FrontierCrawler(spark, cyclic_links).run(SEEDS)
-    spark.conf.set("xidel.crawl.checkpointImpl", "parquet")
-    spark.conf.set("xidel.crawl.checkpointDir", str(tmp_path / "ck"))
-    try:
-        pq = FrontierCrawler(spark, cyclic_links).run(SEEDS)
-        assert {r["url"] for r in plain.seen.collect()} == {
-            r["url"] for r in pq.seen.collect()
-        }
-        assert [m["enqueued"] for m in plain.metrics] == [
-            m["enqueued"] for m in pq.metrics
-        ]
-    finally:
-        spark.conf.unset("xidel.crawl.checkpointImpl")
-        spark.conf.unset("xidel.crawl.checkpointDir")
 
 
 def test_crawler_bloom_path_equal(spark, cyclic_links):

@@ -1,17 +1,22 @@
-"""FrontierCrawler — the production wave loop with all scale components.
+"""FrontierCrawler — the dedup-ON BFS wave loop with all scale components.
 
 One object wires together what the reference does in its recursive loop
 (xidelbase.pas:1996-2137) plus the north rule's scale transplants:
 
-frontier wave → robots filter (broadcast rule join) → link expansion
-(frontier ⋈ links) → within-wave first-enqueuer resolution → Bloom
-pre-filter → exact anti-join vs seen → politeness-scheduled new frontier →
-checkpoint (frontier + seen + bloom + lineage metrics) → next wave.
+frontier wave → link expansion (engine.expand: frontier ⋈ links, then
+within-wave first-enqueuer resolution) → robots filter (broadcast rule
+join) → Bloom pre-filter → exact anti-join vs seen → politeness-scheduled
+new frontier → checkpoint (frontier + seen + bloom + lineage metrics) →
+next wave.
 
-Partitioning: the frontier is hash-partitioned by host (politeness bucket
-== shuffle partition), candidates shuffle once on url for the dedup
-aggregate, and the anti-join's seen side is partitioned the same way so
-AQE can plan it shuffle-free or skew-split it.
+Ranks give a total, deterministic crawl order (BFS-flavored); the seen SET
+equals the exact engine's whenever depth is unlimited, since both are
+reachability.
+
+Partitioning: with politeness on, the frontier is hash-partitioned by host
+(politeness bucket == shuffle partition); candidates shuffle once on url
+for the dedup aggregate, and the anti-join's seen side is partitioned the
+same way.
 
 Resume: constructing a crawler over a store with committed waves continues
 from the latest snapshot; a crawl killed mid-wave re-runs only that wave
@@ -20,18 +25,20 @@ from the latest snapshot; a crawl killed mid-wave re-runs only that wave
 
 from __future__ import annotations
 
+import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..urlnorm import host_of
 from ..util import checkpoint_reset_stats
-from .bloom import build_bloom, split_candidates
-from .bucketed import BucketedTable
+from .bloom import ShardedBloom, build_bloom, split_candidates
 from .checkpoint import CrawlStateStore
-from .engine import UNLIMITED, _seeds_df
-from .order import seg
+from .engine import BROADCAST_MAX_ROWS, FANOUT_GUESS, UNLIMITED, _seeds_df, _sized_loop, expand
+from .politeness import host_watermark, politeness_schedule
 from .robots import apply_robots
 
 
@@ -41,9 +48,52 @@ class CrawlRun:
     frontier: DataFrame
     waves: int
     metrics: list[dict] = field(default_factory=list)
+    increments: Callable[[], list[DataFrame]] = list
+
+    @property
+    def visited(self) -> DataFrame:
+        """(url, rank, depth) of every enqueued url, one row each: the union
+        of the checkpointed frontier increments (the store's on resume)."""
+        return reduce(
+            DataFrame.unionByName,
+            [inc.select("url", "rank", "depth") for inc in self.increments()],
+        )
+
+
+def _seen_side(seen: DataFrame, static: bool) -> DataFrame:
+    """seen table prepared for the per-wave dedup left-join. On
+    statically-planned waves (AQE off) the planner would pick a sort-merge
+    join — sorting the whole seen side every wave — so the join is hinted
+    SHUFFLE_HASH: per-partition builds are bounded by the wave sizing
+    (~ROWS_PER_PARTITION entries). Big AQE waves are left to the runtime
+    SMJ→SHJ conversion, which checks actual sizes."""
+    side = seen.withColumn("__seen", F.lit(True))
+    return side.hint("SHUFFLE_HASH") if static else side
+
+
+def _expected_rows(metrics: list[dict], seen_base: int) -> int:
+    """The wave's sizing input. metrics[-1] is always the PREVIOUS wave: its
+    enqueued count is the live frontier size and candidates/enqueued its
+    observed fanout. The dedup join's BIG side is the seen table (its whole
+    right side shuffles every wave), so partitions are sized by
+    max(expected candidates, |seen|) — sizing by candidates alone funnelled
+    the 1M-row seen sort through one task at the tail."""
+    fan, fresh = FANOUT_GUESS, 1
+    if metrics:
+        fresh = metrics[-1].get("enqueued") or 1
+        if metrics[-1].get("candidates"):
+            fan = max(1.0, metrics[-1]["candidates"] / fresh)
+    seen_now = seen_base + sum(m["enqueued"] for m in metrics)
+    return int(max(1, fresh * fan, seen_now))
 
 
 class FrontierCrawler:
+    """The wave loop. `run()` owns the session while it runs: every wave
+    sets `spark.sql.shuffle.partitions` and `spark.sql.adaptive.enabled`
+    from the wave's expected rows (engine._sized_loop), and both are
+    restored to the caller's values when the run ends or raises. A query
+    planned concurrently on the same session sees the wave's values."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -55,23 +105,7 @@ class FrontierCrawler:
         max_depth: int = UNLIMITED,
         use_bloom: bool | str = "auto",
         bloom_shards: int = 16,
-        partition_by_host: bool | str = "auto",
-        bucketed: bool = False,
-        n_buckets: int = 32,
-        state_prefix: str = "xs",
-        broadcast_frontier_max: int = 2_000_000,
     ):
-        self.broadcast_frontier_max = broadcast_frontier_max
-        # 'auto' (r6): the host repartition exists so politeness buckets ==
-        # shuffle partitions; with wait_ms=0 nothing consumes that layout
-        # and the extra per-wave exchange of the whole fresh frontier is
-        # pure cost (guide §2.4 — measured 0.12 s/wave at 1M nodes).
-        if partition_by_host == "auto":
-            partition_by_host = wait_ms > 0
-        self.partition_by_host = partition_by_host
-        self.bucketed = bucketed
-        self.n_buckets = n_buckets
-        self.state_prefix = state_prefix
         self.spark = spark
         self.links = links.select(
             F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst")
@@ -106,18 +140,6 @@ class FrontierCrawler:
             self._bloom_active = True
         return self._bloom_active
 
-    def _seen_join_side(self, seen: DataFrame) -> DataFrame:
-        """seen table prepared for the per-wave dedup left-join. On
-        statically-planned waves (AQE off) the planner would pick a
-        sort-merge join — sorting the whole seen side every wave — so the
-        join is hinted SHUFFLE_HASH: per-partition builds are bounded by
-        the wave sizing (~rows_per_part entries). Big AQE waves are left to
-        the runtime SMJ→SHJ conversion, which checks actual sizes."""
-        side = seen.withColumn("__seen", F.lit(True))
-        if getattr(self, "_wave_static", False):
-            side = side.hint("SHUFFLE_HASH")
-        return side
-
     def _filter_robots(self, cand: DataFrame) -> tuple[DataFrame, int]:
         if self.robots_rules is None:
             return cand, 0
@@ -129,269 +151,184 @@ class FrontierCrawler:
         blocked = cand.count() - kept.count()
         return kept, blocked
 
-    def run(self, seeds: list[str] | DataFrame, *, max_waves: int = 10_000) -> CrawlRun:
-        spark = self.spark
-        start_wave = 0
-        metrics: list[dict] = []
-        seen_table = None
-        if self.bucketed:
-            # shuffle-stable state: links bucketed by src (expansion join
-            # shuffles only the frontier), seen bucketed by url (dedup join
-            # shuffles only the candidates). Iceberg bucket(N, col) on a
-            # real cluster.
-            links_table = BucketedTable(
-                spark, f"{self.state_prefix}_links", "src", self.n_buckets
-            )
-            links_table.overwrite(self.links)
-            self.links = links_table.df()
-            seen_table = BucketedTable(
-                spark, f"{self.state_prefix}_seen", "url", self.n_buckets
-            )
-        watermark = None  # per-host last scheduled_ms carried ACROSS waves
-        snap = self.store.load(spark) if self.store else None
-        if snap is not None:
-            frontier = snap.frontier.localCheckpoint(eager=True)
-            seen = snap.seen  # union of committed increments (never rewritten)
-            start_wave = snap.wave + 1
-            metrics = [m["metrics"] for m in self.store.manifests()]
-            if seen_table is not None:
-                seen_table.overwrite(seen)
-            if self.wait_ms > 0:
-                # rebuild the politeness watermark from committed waves so
-                # the >= wait spacing survives a kill/resume boundary
-                from .politeness import host_watermark
+    def _schedule(self, frontier: DataFrame, watermark: DataFrame | None) -> DataFrame:
+        """Adds the host bucket. With politeness on: the earliest allowed
+        fetch time per host (the watermark offsets each host past its
+        previous wave's last fetch, so spacing holds across the wave
+        boundary too), hash-partitioned by host. With wait_ms=0 nothing
+        consumes that layout, and the extra exchange of the whole frontier
+        would be pure cost (guide §2.4 — measured 0.12 s/wave at 1M
+        nodes)."""
+        if self.wait_ms <= 0:
+            return frontier.withColumn("host", host_of(F.col("url")))
+        return politeness_schedule(
+            frontier, wait_ms=self.wait_ms, watermark=watermark
+        ).repartition(F.col("host"))
 
-                for inc in self.store.increments(spark, snap.wave):
-                    if "scheduled_ms" in inc.columns:
-                        watermark = host_watermark(
-                            inc.select("host", "scheduled_ms"), watermark
-                        )
-                if watermark is not None:
-                    watermark = watermark.localCheckpoint(eager=True)
+    def _watermark(self, frontier: DataFrame, prev: DataFrame | None) -> DataFrame | None:
+        """Per-host last scheduled fetch, carried ACROSS waves."""
+        if self.wait_ms <= 0:
+            return None
+        wm = host_watermark(frontier.select("host", "scheduled_ms"), prev).localCheckpoint(eager=True)
+        if prev is not None:
+            prev.unpersist()
+        return wm
+
+    def _grow_bloom(
+        self, bloom: ShardedBloom | None, seen: DataFrame, frontier: DataFrame,
+        seen_count: int, last_fresh: int,
+    ) -> ShardedBloom:
+        """Sized from the OBSERVED seen count (exact, from wave metrics);
+        rebuilt at 4x when the count outgrows capacity, otherwise extended
+        INCREMENTALLY: only the previous wave's fresh urls are hashed and
+        OR-merged — O(increment + filter), never O(seen)."""
+        if bloom is None or seen_count > 0.7 * bloom.capacity:
+            grown = build_bloom(
+                seen,
+                capacity=max(1_000_000, 4 * seen_count),
+                n_shards=self.bloom_shards,
+                approx_rows=seen_count,
+            )
         else:
-            frontier = _seeds_df(spark, seeds, dedup=True)
-            frontier, blocked = self._filter_robots(frontier)
-            if self.wait_ms > 0:
-                # seeds are fetches too: schedule wave 0 so the cross-wave
-                # watermark starts at the seeds' last per-host fetch
-                from .politeness import politeness_schedule
+            grown = bloom.merge(build_bloom(
+                frontier.select("url"),
+                capacity=bloom.capacity,
+                n_shards=self.bloom_shards,
+                eager=False,
+                approx_rows=last_fresh,
+            ))
+        if bloom is not None:
+            bloom.unpersist()
+        return grown
 
-                frontier = politeness_schedule(frontier, wait_ms=self.wait_ms)
-            else:
-                frontier = frontier.withColumn("host", host_of(F.col("url")))
-            if self.partition_by_host:
-                frontier = frontier.repartition(F.col("host"))
-            frontier = checkpoint_reset_stats(frontier)
-            seen = frontier.select("url")
-            if seen_table is not None:
-                seen_table.overwrite(frontier.select("url"))
-            m = {"wave": 0, "candidates": 0, "deduped": 0, "robots_blocked": blocked,
-                 "enqueued": frontier.count()}
-            metrics.append(m)
-            if self.wait_ms > 0:
-                from .politeness import host_watermark
+    def _seed_wave(self, seeds, prior_seen: DataFrame | None):
+        frontier = _seeds_df(self.spark, seeds, dedup=True)
+        if prior_seen is not None:
+            frontier = frontier.join(prior_seen, "url", "left_anti")
+        frontier, blocked = self._filter_robots(frontier)
+        # seeds are fetches too: schedule wave 0 so the cross-wave
+        # watermark starts at the seeds' last per-host fetch
+        frontier = checkpoint_reset_stats(self._schedule(frontier, None))
+        m = {"wave": 0, "candidates": 0, "deduped": 0, "robots_blocked": blocked,
+             "enqueued": frontier.count()}
+        watermark = self._watermark(frontier, None)
+        if self.store:
+            self.store.commit(0, frontier, m)
+        seen = frontier.select("url")
+        if prior_seen is not None:
+            seen = prior_seen.unionByName(seen)
+        return frontier, seen, [m], watermark
 
-                watermark = host_watermark(
-                    frontier.select("host", "scheduled_ms")
-                ).localCheckpoint(eager=True)
-            if self.store:
-                self.store.commit(0, frontier, m)
-            start_wave = 1
+    def _resume(self, snap):
+        frontier = snap.frontier.localCheckpoint(eager=True)
+        metrics = [m["metrics"] for m in self.store.manifests()]
+        watermark = None
+        if self.wait_ms > 0:
+            # rebuild the politeness watermark from committed waves so
+            # the >= wait spacing survives a kill/resume boundary
+            for inc in self.store.increments(self.spark, snap.wave):
+                if "scheduled_ms" in inc.columns:
+                    watermark = host_watermark(
+                        inc.select("host", "scheduled_ms"), watermark
+                    )
+            if watermark is not None:
+                watermark = watermark.localCheckpoint(eager=True)
+        # seen = union of committed increments (never rewritten)
+        return frontier, snap.seen, metrics, watermark
 
-        bloom = None
-        wave = start_wave
-        last_fresh = metrics[-1]["enqueued"] if metrics else None
-        import time as _time
-
-        # scale-adaptive per-wave physical sizing (r6, guide §2): the wave
-        # loop's volume is KNOWN (exact per-wave counts ride the metrics),
-        # so partition counts are derived from the expected candidate rows
-        # instead of a session-wide constant, and AQE — whose per-query
-        # stage re-planning measured ~0.5 s/wave of pure driver latency at
-        # 1M nodes — stays on only for waves big enough to need runtime
-        # coalescing/skew handling. All thresholds conf-overridable; the
-        # plan shapes are identical, only partition counts change.
-        conf = spark.conf
-        base_parts = int(conf.get("spark.sql.shuffle.partitions"))
-        aqe_orig = conf.get("spark.sql.adaptive.enabled", "true")
-        rows_per_part = int(conf.get("xidel.crawl.waveRowsPerPartition", "50000"))
-        aqe_min = int(conf.get("xidel.crawl.aqeMinCandidates", "5000000"))
-        fanout_guess = float(conf.get("xidel.crawl.fanoutGuess", "4"))
-
-        def _wave_sizing() -> None:
-            # metrics is mutated in place by the wave loop, so metrics[-1]
-            # is always the PREVIOUS wave: its enqueued count is the live
-            # frontier size and candidates/enqueued its observed fanout.
-            # The dedup join's BIG side is the seen table (its whole right
-            # side shuffles every wave), so partitions are sized by
-            # max(expected candidates, |seen|) — sizing by candidates alone
-            # funnelled the 1M-row seen sort through one task at the tail.
-            fan, fresh = fanout_guess, 1
-            if metrics:
-                fresh = metrics[-1].get("enqueued") or 1
-                if metrics[-1].get("candidates"):
-                    fan = max(1.0, metrics[-1]["candidates"] / fresh)
-            seen_now = sum(m["enqueued"] for m in metrics)
-            expected = int(max(1, fresh * fan, seen_now))
-            parts = min(base_parts, max(1, -(-expected // rows_per_part)))
-            conf.set("spark.sql.shuffle.partitions", str(parts))
-            self._wave_static = expected <= aqe_min
-            conf.set(
-                "spark.sql.adaptive.enabled",
-                "false" if self._wave_static else "true",
-            )
-
-        try:
-            return self._run_waves(
-                spark, wave, max_waves, metrics, seen, seen_table, frontier,
-                watermark, bloom, last_fresh, _wave_sizing, _time,
-            )
-        finally:
-            conf.set("spark.sql.shuffle.partitions", str(base_parts))
-            conf.set("spark.sql.adaptive.enabled", aqe_orig)
-
-    def _run_waves(
-        self, spark, wave, max_waves, metrics, seen, seen_table, frontier,
-        watermark, bloom, last_fresh, _wave_sizing, _time,
+    def run(
+        self,
+        seeds: list[str] | DataFrame,
+        *,
+        max_waves: int = 10_000,
+        seen: DataFrame | None = None,
     ) -> CrawlRun:
-        while wave < max_waves and wave <= self.max_depth:
-            _wave_t0 = _time.time()
-            _wave_sizing()
-            # expansion join: the frontier is usually small relative to the
-            # link table — broadcast it so links never reshuffle (falls back
-            # to a shuffle join automatically when the frontier grows). Only
-            # the columns the expansion needs are broadcast (url/rank/depth
-            # — not host/scheduled_ms; guide §2.3).
-            fslim = frontier.select("url", "rank", "depth")
-            frontier_side = (
-                F.broadcast(fslim)
-                if last_fresh is not None and last_fresh <= self.broadcast_frontier_max
-                else fslim
-            )
-            cand = (
-                frontier_side.join(self.links, fslim.url == self.links.src)
-                .groupBy(self.links.dst)
-                .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
-                .select(
-                    F.col("dst").alias("url"),
-                    F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
-                    (F.col("m.depth") + 1).alias("depth"),
+        """Crawl from `seeds` (or resume the store's latest snapshot) until
+        a wave enqueues nothing, `max_depth` is reached or `max_waves`
+        waves have run. `seen` (url) is the dup list this crawl starts
+        from — e.g. an earlier stream batch's seen set: seeds in it are
+        dropped and every wave dedups against it. Ignored on resume."""
+        spark = self.spark
+        snap = self.store.load(spark) if self.store else None
+        seen_base = 0
+        if snap is None:
+            if seen is not None:
+                seen_base = seen.count()
+            frontier, seen, metrics, watermark = self._seed_wave(seeds, seen)
+            wave = 1
+        else:
+            frontier, seen, metrics, watermark = self._resume(snap)
+            wave = snap.wave + 1
+
+        parts = [frontier]
+        bloom = None
+        last_fresh = metrics[-1]["enqueued"]
+        with _sized_loop(spark, _expected_rows(metrics, seen_base)) as sizing:
+            while wave < max_waves and wave <= self.max_depth:
+                wave_t0 = time.time()
+                sizing.resize(_expected_rows(metrics, seen_base))
+                # only the columns the expansion needs are broadcast
+                # (url/rank/depth — not host/scheduled_ms; guide §2.3)
+                cand = expand(
+                    frontier.select("url", "rank", "depth"), self.links,
+                    broadcast=last_fresh <= BROADCAST_MAX_ROWS,
                 )
-            )
-            cand, robots_blocked = self._filter_robots(cand)
-            seen_count_now = sum(m["enqueued"] for m in metrics)
-            if self._bloom_this_wave(seen_count_now, last_fresh):
-                # Bloom pre-filter: definitely-new candidates skip the
-                # exact join; only maybe-seen get the flag lookup. Sized
-                # from the OBSERVED seen count (exact, from wave metrics);
-                # rebuilt at 4x when the count outgrows capacity, otherwise
-                # extended INCREMENTALLY: only the previous wave's fresh
-                # urls are hashed and OR-merged — O(increment + filter),
-                # never O(seen).
-                seen_count = seen_count_now
-                if bloom is None or seen_count > 0.7 * bloom.capacity:
-                    old = bloom
-                    bloom = build_bloom(
-                        seen,
-                        capacity=max(1_000_000, 4 * seen_count),
-                        n_shards=self.bloom_shards,
-                        approx_rows=seen_count,
-                    )
-                    if old is not None:
-                        old.unpersist()
+                cand, robots_blocked = self._filter_robots(cand)
+                seen_count = seen_base + sum(m["enqueued"] for m in metrics)
+                if self._bloom_this_wave(seen_count, last_fresh):
+                    # definitely-new candidates skip the exact join; only
+                    # maybe-seen ones get the flag lookup
+                    bloom = self._grow_bloom(bloom, seen, frontier, seen_count, last_fresh)
+                    definitely_new, maybe = split_candidates(cand, bloom)
+                    joined = definitely_new.withColumn(
+                        "__seen", F.lit(None).cast("boolean")
+                    ).unionByName(maybe.join(_seen_side(seen, sizing.static), "url", "left"))
                 else:
-                    inc = build_bloom(
-                        frontier.select("url"),
-                        capacity=bloom.capacity,
-                        n_shards=self.bloom_shards,
-                        eager=False,
-                        approx_rows=last_fresh,
+                    joined = cand.join(_seen_side(seen, sizing.static), "url", "left")
+                # ONE job per wave: candidate/dedup counts ride the frontier
+                # checkpoint as an Observation over the pre-filter join rows
+                # — no separate wide checkpoint and no extra count jobs
+                obs = Observation(f"crawl_w{wave}")
+                fresh = (
+                    joined.observe(
+                        obs,
+                        F.count(F.lit(1)).alias("n_cand"),
+                        F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
                     )
-                    old = bloom
-                    bloom = bloom.merge(inc)
-                    old.unpersist()
-                definitely_new, maybe = split_candidates(cand, bloom)
-                joined = definitely_new.withColumn(
-                    "__seen", F.lit(None).cast("boolean")
-                ).unionByName(
-                    maybe.join(
-                        self._seen_join_side(seen), "url", "left"
-                    )
+                    .where(F.col("__seen").isNull())
+                    .drop("__seen")
                 )
-            else:
-                seen_side = seen_table.df() if seen_table is not None else seen
-                joined = cand.join(
-                    self._seen_join_side(seen_side), "url", "left"
-                )
-            # ONE job per wave: candidate/dedup counts ride the frontier
-            # checkpoint as an Observation over the pre-filter join rows —
-            # no separate wide checkpoint and no extra count jobs
-            from pyspark.sql import Observation
-
-            obs = Observation(f"crawl_w{wave}")
-            fresh = (
-                joined.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_cand"),
-                    F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
-                )
-                .where(F.col("__seen").isNull())
-                .drop("__seen")
-            )
-            next_frontier = fresh.withColumn("host", host_of(F.col("url")))
-            if self.wait_ms > 0:
-                # politeness: earliest allowed fetch time per host bucket
-                # (window over the host partition about to be created); the
-                # watermark offsets each host past its previous wave's last
-                # fetch so spacing holds across the wave boundary too
-                from .politeness import host_watermark, politeness_schedule
-
-                next_frontier = politeness_schedule(
-                    next_frontier.drop("host"), wait_ms=self.wait_ms,
-                    watermark=watermark,
-                )
-            if self.partition_by_host:
-                # (measured round 3: sizing the partition count to the wave
-                # changed nothing — the ~2 s/wave floor is localCheckpoint
-                # materialization + job scheduling, not task count)
-                next_frontier = next_frontier.repartition(F.col("host"))
-            # slim dedicated checkpoint: what stays alive across waves is
-            # only (url, rank, depth, host) per increment — the seen union
-            # reads these. Stats are RESET here: the bloom probe's 8 joins
-            # would compound sizeInBytes estimates 8x per wave (see util)
-            next_frontier = checkpoint_reset_stats(next_frontier)
-            got = obs.get
-            n_cand = int(got["n_cand"] or 0)
-            n_fresh = n_cand - int(got["n_dup"] or 0)
-            m = {
-                "wave": wave,
-                "candidates": n_cand,
-                "deduped": n_cand - n_fresh,
-                "robots_blocked": robots_blocked,
-                "enqueued": n_fresh,
-                "wall_s": round(_time.time() - _wave_t0, 3),
-            }
-            metrics.append(m)
-            last_fresh = n_fresh
-            if n_fresh == 0:
-                next_frontier.unpersist()
-                break
-            frontier = next_frontier
-            if self.wait_ms > 0:
-                from .politeness import host_watermark
-
-                old_wm = watermark
-                watermark = host_watermark(
-                    frontier.select("host", "scheduled_ms"), watermark
-                ).localCheckpoint(eager=True)
-                if old_wm is not None:
-                    old_wm.unpersist()
-            # append-only seen: new increment unioned/appended, prior
-            # increments are already stored — nothing is rewritten
-            seen = seen.unionByName(frontier.select("url"))
-            if seen_table is not None:
-                seen_table.append(frontier.select("url"))
-            if self.store:
-                self.store.commit(wave, frontier, m)
-            wave += 1
-        return CrawlRun(seen=seen, frontier=frontier, waves=wave, metrics=metrics)
+                # slim dedicated checkpoint: what stays alive across waves is
+                # only the increment — the seen union reads these. Stats are
+                # RESET here: the bloom probe's 8 joins would compound
+                # sizeInBytes estimates 8x per wave (see util)
+                next_frontier = checkpoint_reset_stats(self._schedule(fresh, watermark))
+                got = obs.get
+                n_cand = int(got["n_cand"] or 0)
+                n_fresh = n_cand - int(got["n_dup"] or 0)
+                m = {
+                    "wave": wave,
+                    "candidates": n_cand,
+                    "deduped": n_cand - n_fresh,
+                    "robots_blocked": robots_blocked,
+                    "enqueued": n_fresh,
+                    "wall_s": round(time.time() - wave_t0, 3),
+                }
+                metrics.append(m)
+                last_fresh = n_fresh
+                if n_fresh == 0:
+                    next_frontier.unpersist()
+                    break
+                frontier = next_frontier
+                watermark = self._watermark(frontier, watermark)
+                # append-only seen: the new increment is unioned, prior
+                # increments are already stored — nothing is rewritten
+                seen = seen.unionByName(frontier.select("url"))
+                parts.append(frontier)
+                if self.store:
+                    self.store.commit(wave, frontier, m)
+                wave += 1
+        # a resumed run holds only its own increments; the store has all
+        increments = (lambda: parts) if snap is None else (lambda: self.store.increments(spark))
+        return CrawlRun(seen=seen, frontier=frontier, waves=wave, metrics=metrics,
+                        increments=increments)

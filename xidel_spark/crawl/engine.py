@@ -35,49 +35,69 @@ genuinely sequential (an over-depth enqueue still poisons the seen set:
 xidelbase.pas add() registers before processFollowTo's depth check), and
 lexicographically-first DFS is P-complete — `crawl_exact_depth_limited`
 replays it with a per-pop Spark loop (exact; used at fixture scale). The
-scalable path for bounded-depth production crawls is `crawl_waves`.
+scalable path for bounded-depth production crawls is the BFS wave loop,
+`FrontierCrawler(max_depth=...)` (crawler.py).
+
+All loops share one expansion step (`expand`: join → per-dst min over
+(parent rank, link idx, depth)) and one sizing policy (`_sized_loop`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .order import seg, seg_py
 
 UNLIMITED = 1 << 30
 
 
+# Physical sizing policy of every crawl loop (r6, guide §2). Each loop
+# knows its bounded work, so shuffle partitions come from the expected rows
+# instead of a session-wide constant, and AQE, whose per-query stage
+# re-planning measured ~0.5 s of driver latency per tiny iteration, stays
+# on only above AQE_MIN_ROWS. Results are unaffected: only partition counts
+# and re-planning change.
+ROWS_PER_PARTITION = 50_000
+AQE_MIN_ROWS = 5_000_000
+# a frontier (or relaxation state) of at most this many rows is broadcast
+# into the expansion join, so the link table needs no exchange or sort
+BROADCAST_MAX_ROWS = 2_000_000
+# the crawler's fanout estimate before the first wave has been observed
+FANOUT_GUESS = 4.0
+
+
+def _partitions(base: int, rows: int) -> int:
+    return min(base, max(1, -(-rows // ROWS_PER_PARTITION)))
+
+
 class _sized_loop:
-    """Scale-adaptive physical sizing for an iterative fixpoint (r6,
-    guide §2): shuffle partitions derived from the loop's bounded work
-    (expected_rows / xidel.crawl.waveRowsPerPartition, capped at the
-    session setting), and AQE — whose per-query stage re-planning measured
-    ~0.5 s of driver latency per tiny iteration — disabled when the whole
-    loop is below xidel.crawl.aqeMinCandidates rows. Restores both confs on
-    exit; results are unaffected (only partition counts / replanning
-    change). `static` tells callers whether the plan is statically sized
-    (they then hint SHUFFLE_HASH where the planner would otherwise pick a
-    sort-merge join on default-stat checkpointed inputs)."""
+    """Sizes the session for a loop expecting `expected` rows and restores
+    `spark.sql.shuffle.partitions` / `spark.sql.adaptive.enabled` on exit.
+    `resize(expected)` re-sizes between iterations; `static` tells callers
+    whether the plan is statically sized (they then hint SHUFFLE_HASH
+    where the planner would otherwise pick a sort-merge join on
+    default-stat checkpointed inputs)."""
 
-    def __init__(self, spark: SparkSession, expected_rows: int):
+    def __init__(self, spark: SparkSession, expected: int):
         self.spark = spark
-        self.expected = max(1, int(expected_rows))
+        self.expected = expected
 
-    def __enter__(self) -> bool:
+    def __enter__(self) -> _sized_loop:
         conf = self.spark.conf
         self._parts0 = conf.get("spark.sql.shuffle.partitions")
         self._aqe0 = conf.get("spark.sql.adaptive.enabled", "true")
-        rpp = int(conf.get("xidel.crawl.waveRowsPerPartition", "50000"))
-        aqe_min = int(conf.get("xidel.crawl.aqeMinCandidates", "5000000"))
-        parts = min(int(self._parts0), max(1, -(-self.expected // rpp)))
-        static = self.expected <= aqe_min
-        conf.set("spark.sql.shuffle.partitions", str(parts))
-        conf.set("spark.sql.adaptive.enabled", "false" if static else "true")
-        return static
+        self.resize(self.expected)
+        return self
+
+    def resize(self, expected: int) -> None:
+        expected = max(1, int(expected))
+        self.static = expected <= AQE_MIN_ROWS
+        conf = self.spark.conf
+        conf.set("spark.sql.shuffle.partitions", str(_partitions(int(self._parts0), expected)))
+        conf.set("spark.sql.adaptive.enabled", "false" if self.static else "true")
 
     def __exit__(self, *exc) -> None:
         self.spark.conf.set("spark.sql.shuffle.partitions", self._parts0)
@@ -89,7 +109,6 @@ class CrawlResult:
     visited: DataFrame   # (url, rank, depth) — one row per visit (repeats possible if dedup off)
     seen: DataFrame      # (url) — every enqueued url (the duplication list)
     waves: int = 0
-    metrics: list[dict] = field(default_factory=list)
 
 
 def _seeds_df(spark: SparkSession, seeds: list[str] | DataFrame, dedup: bool) -> DataFrame:
@@ -119,11 +138,46 @@ def _with_order(visited: DataFrame, approx_rows: int | None = None) -> DataFrame
 
     n = None
     if approx_rows is not None:
-        spark = visited.sparkSession
-        rpp = int(spark.conf.get("xidel.crawl.waveRowsPerPartition", "50000"))
-        base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = min(base, max(1, -(-int(approx_rows) // rpp)))
+        base = int(visited.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = _partitions(base, int(approx_rows))
     return total_order(visited, ["rank"], out_col="ord", num_partitions=n)
+
+
+def _pin_links(links: DataFrame) -> tuple[DataFrame, int]:
+    """The link table materialized ONCE, hash-partitioned on the join key.
+
+    Without this every iteration re-runs the whole upstream plan (corpus
+    synthesis / span extraction — scan + groupBy + join + explode per
+    iteration, guide §2.4) and re-shuffles links for the join. The
+    persisted InMemoryRelation keeps hashpartitioning(src), so only the
+    (small) frontier side exchanges per step. Standard iterative-algorithm
+    shape; MEMORY_AND_DISK spills at scale. Callers unpersist it."""
+    links = (
+        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
+        .repartition(F.col("src"))
+        .persist()
+    )
+    return links, links.count()
+
+
+def expand(frontier: DataFrame, links: DataFrame, broadcast: bool) -> DataFrame:
+    """One first-enqueuer step: frontier (url, rank, depth) ⋈ links, then
+    per dst the smallest (parent rank, link idx) wins — the earliest
+    visited parent and its first link to dst (xidelbase.pas:2007-2020).
+    Returns (url, rank || seg(idx), depth + 1). `broadcast` ships the
+    frontier into the join so the link side needs neither exchange nor
+    sort."""
+    side = F.broadcast(frontier) if broadcast else frontier
+    return (
+        side.join(links, frontier.url == links.src)
+        .groupBy(links.dst)
+        .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
+        .select(
+            F.col("dst").alias("url"),
+            F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
+            (F.col("m.depth") + 1).alias("depth"),
+        )
+    )
 
 
 def crawl_exact(
@@ -141,52 +195,26 @@ def crawl_exact(
     """
     from pyspark.sql import Observation
 
-    # materialize the link table ONCE, hash-partitioned on the join key:
-    # without this every relaxation step re-runs the whole upstream plan
-    # (corpus synthesis / span extraction — scan + groupBy + join + explode
-    # per iteration, guide §2.4) and re-shuffles links for the sort-merge
-    # join. The persisted InMemoryRelation keeps hashpartitioning(src), so
-    # only the (small) best side exchanges per step. Standard iterative-
-    # algorithm shape; MEMORY_AND_DISK spills at scale.
-    links = (
-        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_links = links.count()
+    links, n_links = _pin_links(links)
     waves = 0
-    # best is broadcast into the relaxation join while provably small
-    # (|best| ≤ |seeds| + Σ changed, tracked exactly from the Observation)
-    # — the links side then needs neither exchange nor sort; falls back to
-    # the co-partitioned shuffle join when the frontier outgrows the cap,
-    # exactly like FrontierCrawler's frontier broadcast.
-    bcast_max = int(spark.conf.get("xidel.crawl.broadcastBestMax", "2000000"))
     try:
-        with _sized_loop(spark, n_links) as static:
+        with _sized_loop(spark, n_links) as sizing:
             # seed prep (a dedup groupBy + checkpoint) runs under the loop
             # sizing too — at fixture/gate scale it is a 1-partition job
             seed_urls = _seeds_df(spark, seeds, dedup=True).localCheckpoint(eager=True)
             best = seed_urls
+            # |best| ≤ |seeds| + Σ changed, tracked exactly from the
+            # Observation: best is broadcast while provably small
             best_rows_ub = seed_urls.count()
+            lnk = links.hint("SHUFFLE_HASH") if sizing.static else links
             for it in range(max_iter):
                 waves += 1
-                # one relaxation step: per dst, the best (parent rank, link
-                # idx). Seeds are excluded: all data sources are enqueued
-                # into the dup list before any visit (xidelbase.pas:
-                # 2099-2100), so a seed's rank is fixed and links back to a
-                # seed are always dedup-dropped.
-                lnk = links.hint("SHUFFLE_HASH") if static else links
-                bside = F.broadcast(best) if best_rows_ub <= bcast_max else best
-                cand = (
-                    bside.join(lnk, best.url == links.src)
-                    .groupBy(links.dst)
-                    .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
-                    .select(
-                        F.col("dst").alias("url"),
-                        F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
-                        (F.col("m.depth") + 1).alias("depth"),
-                    )
-                    .join(seed_urls.select("url"), "url", "left_anti")
+                # Seeds are excluded: all data sources are enqueued into
+                # the dup list before any visit (xidelbase.pas:2099-2100),
+                # so a seed's rank is fixed and links back to a seed are
+                # always dedup-dropped.
+                cand = expand(best, lnk, broadcast=best_rows_ub <= BROADCAST_MAX_ROWS).join(
+                    seed_urls.select("url"), "url", "left_anti"
                 )
                 # convergence detection FUSED into the relaxation aggregate:
                 # carry the previous rank on the best side; a url changed iff
@@ -238,21 +266,14 @@ def expand_nodedup(
     Pure tree expansion: every link spawns a visit instance (goldens
     tests/output/maxlevel0..3, repetitionon). One wave per depth level.
     """
-    # same iterative-loop materialization + sizing as crawl_exact: links is
-    # scanned once per depth level, never re-derived or re-shuffled
-    links = (
-        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_links = links.count()
+    links, n_links = _pin_links(links)
     enqueued_only = None
     try:
-        with _sized_loop(spark, n_links) as static:
+        with _sized_loop(spark, n_links) as sizing:
             level = _seeds_df(spark, seeds, dedup=False).localCheckpoint(eager=True)
             layers = [level]
+            lnk = links.hint("SHUFFLE_HASH") if sizing.static else links
             for d in range(max_depth + 1):
-                lnk = links.hint("SHUFFLE_HASH") if static else links
                 children = (
                     level.join(lnk, level.url == links.src)
                     .select(
@@ -296,13 +317,14 @@ def crawl_exact_depth_limited(
     This combination is inherently sequential in the reference (the seen set
     is mutated in visit order and over-depth enqueues still poison it), so we
     replay it with the sequential oracle and parallelize the result. Only
-    used at fixture scale; production bounded-depth crawls use crawl_waves.
+    used at fixture scale; production bounded-depth crawls use
+    FrontierCrawler(max_depth=...).
 
     Guarded: a link table above `max_replay_links` rows raises instead of
     OOM-ing the driver — this path is P-complete (dedup ON + finite depth
     serializes on the visit-order-mutated seen set), so there is no
     distributed exact form to fall back to; callers at scale must accept
-    crawl_waves' BFS order or lift the depth limit (crawl_exact).
+    FrontierCrawler's BFS order or lift the depth limit (crawl_exact).
     """
     from .simulator import simulate_crawl
 
@@ -317,7 +339,7 @@ def crawl_exact_depth_limited(
                 f"(P-complete: dedup ON + finite depth is inherently "
                 f"sequential) and the link table has {n_links} rows "
                 f"(> xidel.crawl.maxReplayLinks={max_replay_links}). "
-                f"Use crawl_waves(max_depth=...) for scalable BFS-order "
+                f"Use FrontierCrawler(max_depth=...) for scalable BFS-order "
                 f"bounded crawls, or crawl_exact for unlimited depth."
             )
         rows = links.select("src", "idx", "dst").collect()
@@ -334,98 +356,3 @@ def crawl_exact_depth_limited(
     )
     seen = spark.createDataFrame([(u,) for u in sorted(sim.seen)], "url string")
     return CrawlResult(visited=visited, seen=seen, waves=len(sim.visit_order))
-
-
-def crawl_waves(
-    spark: SparkSession,
-    links: DataFrame,
-    seeds: list[str] | DataFrame,
-    *,
-    max_depth: int = UNLIMITED,
-    max_waves: int = 10_000,
-    shuffle_partitions: int | None = None,
-) -> CrawlResult:
-    """Scalable wave-synchronous (BFS) frontier loop — the production path.
-
-    Per wave: frontier ⋈ links → candidates → within-wave first-enqueuer
-    resolution (min rank) → LEFT ANTI join vs the seen set (the central
-    dedup join, SURVEY.md §2.4) → new frontier. Ranks still give a total,
-    deterministic crawl order (BFS-flavored); the seen SET equals the exact
-    engine's whenever depth is unlimited, since both are reachability.
-
-    Per-wave metrics (candidates / deduped / enqueued) are recorded —
-    the lineage the north rule asks to checkpoint.
-    """
-    from pyspark.sql import Observation
-
-    # iterative-loop materialization + sizing (see crawl_exact): links is
-    # pinned once, co-partitioned on src; the sort-merge join on static
-    # waves is hinted to a shuffled-hash build
-    links = (
-        links.select(F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_links = links.count()
-    metrics: list[dict] = []
-    wave = 0
-    try:
-        with _sized_loop(spark, n_links) as static:
-            frontier = _seeds_df(spark, seeds, dedup=True).localCheckpoint(eager=True)
-            # seen is an append-only UNION of per-wave frontier increments:
-            # each increment is checkpointed exactly once, never rewritten
-            # (the Iceberg append pattern — at 10^10 scale the seen table
-            # must not be copied per wave).
-            seen = frontier.select("url")
-            visited_layers = [frontier]
-            while wave < max_waves:
-                depth = wave
-                if depth + 1 > max_depth:
-                    break
-                lnk = links.hint("SHUFFLE_HASH") if static else links
-                cand = (
-                    frontier.join(lnk, frontier.url == links.src)
-                    .groupBy(links.dst)
-                    .agg(F.min(F.struct("rank", "idx", "depth")).alias("m"))
-                    .select(
-                        F.col("dst").alias("url"),
-                        F.concat(F.col("m.rank"), seg(F.col("m.idx"))).alias("rank"),
-                        (F.col("m.depth") + 1).alias("depth"),
-                    )
-                )
-                # ONE job per wave: the candidate/dedup counts ride the fresh
-                # checkpoint as an Observation over the pre-filter rows — no
-                # separate cand checkpoint and no extra count jobs
-                obs = Observation(f"wave_{wave}")
-                seen_side = seen.withColumn("__seen", F.lit(True))
-                if static:
-                    seen_side = seen_side.hint("SHUFFLE_HASH")
-                fresh = (
-                    cand.join(seen_side, "url", "left")
-                    .observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n_cand"),
-                        F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
-                    )
-                    .where(F.col("__seen").isNull())
-                    .drop("__seen")
-                    .localCheckpoint(eager=True)
-                )
-                got = obs.get
-                n_cand = int(got["n_cand"] or 0)
-                n_fresh = n_cand - int(got["n_dup"] or 0)
-                metrics.append(
-                    {"wave": wave, "candidates": n_cand, "deduped": n_cand - n_fresh, "enqueued": n_fresh}
-                )
-                if n_fresh == 0:
-                    break
-                frontier = fresh
-                seen = seen.unionByName(frontier.select("url"))
-                visited_layers.append(frontier)
-                wave += 1
-    finally:
-        links.unpersist()
-    visited = visited_layers[0]
-    for extra in visited_layers[1:]:
-        visited = visited.unionByName(extra)
-    return CrawlResult(visited=_with_order(visited), seen=seen, waves=wave + 1, metrics=metrics)

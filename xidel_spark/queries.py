@@ -13,7 +13,8 @@ from pyspark.sql.window import Window
 
 from . import corpus
 from .crawl import politeness, requests as req
-from .crawl.engine import crawl_exact, crawl_waves, expand_nodedup
+from .crawl.crawler import FrontierCrawler
+from .crawl.engine import crawl_exact, expand_nodedup
 from .crawl.robots import apply_robots
 from .extract.links import extract_links
 from .urlnorm import canonicalize
@@ -54,10 +55,12 @@ def q_crawl_seen_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seen set + BFS depth on the cyclic corpus — exercises the cross-wave
     anti-join dedup (the production wave loop)."""
     _tune_iterative(spark)
-    links = corpus.synth_links_cyclic(spark, sf_dir)
+    # materialized once: every wave joins it, and the synthetic plan would
+    # otherwise be re-derived per wave
+    links = corpus.synth_links_cyclic(spark, sf_dir).localCheckpoint(eager=True)
     seeds = corpus.synth_seeds(spark, sf_dir)
-    res = crawl_waves(spark, links, seeds)
-    return res.visited.select("url", "depth")
+    run = FrontierCrawler(spark, links).run(seeds)
+    return run.visited.select("url", "depth")
 
 
 def q_link_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,19 +39,19 @@ class ContinuousCrawl:
         self.batches: list[dict] = []
 
     def _process_batch(self, seeds_df: DataFrame, batch_id: int) -> None:
-        crawler = FrontierCrawler(self.spark, self.links, **self.crawler_kw)
-        if self.seen is not None:
-            # pre-seed the dup list with everything earlier batches saw:
-            # cross-batch enqueue-time dedup, same rule as in-batch
-            seeds_df = seeds_df.join(self.seen, "url", "left_anti")
         if seeds_df.isEmpty():
             return
-        run = crawler.run(seeds_df.select("url", "seed_idx"))
-        new_seen = run.seen if self.seen is None else self.seen.unionByName(run.seen).distinct()
-        self.seen = new_seen.localCheckpoint(eager=True)
-        self.batches.append(
-            {"batch_id": batch_id, "waves": run.waves, "seen_total": self.seen.count()}
-        )
+        crawler = FrontierCrawler(self.spark, self.links, **self.crawler_kw)
+        # everything earlier batches saw is the crawler's initial dup list:
+        # cross-batch enqueue-time dedup, same rule as in-batch
+        run = crawler.run(seeds_df.select("url", "seed_idx"), seen=self.seen)
+        self.seen = run.seen
+        self.batches.append({
+            "batch_id": batch_id,
+            "waves": run.waves,
+            "enqueued": sum(m["enqueued"] for m in run.metrics),
+            "seen_total": self.seen.count(),
+        })
 
     def run_from_files(self, seed_dir: str, *, available_now: bool = True):
         stream = (

@@ -76,32 +76,6 @@ def checkpoint_reset_stats(df: DataFrame, eager: bool = True) -> DataFrame:
     eligibility — all loop joins here use explicit broadcast hints anyway.
     """
     spark = df.sparkSession
-    if spark.conf.get("xidel.crawl.checkpointImpl", "local") == "parquet":
-        # RDD-free alternative (VERDICT r4 task 8): parquet round-trip on a
-        # tmpfs dir — stats come from file sizes, so no reset needed. On a
-        # real cluster this is the Iceberg-append shape; on this box the
-        # 12-wave 1M-node microbench measured it ~10% SLOWER warm than
-        # localCheckpoint (27.6 s vs 24.8 s, BASELINE.md), below the 15%
-        # switch bar — 'local' stays the default.
-        import uuid
-
-        base = spark.conf.get("xidel.crawl.checkpointDir", "/dev/shm/xidel_ck")
-        # per-SESSION scope: prior checkpoints stay referenced by live
-        # DataFrames (the seen set unions every wave's increment), so —
-        # exactly like Spark's own sc.setCheckpointDir lifecycle — they
-        # are removed when the application's directory is cleaned, not
-        # per-call. The session hook below deletes the whole app dir on
-        # spark.stop() (review r5: unbounded tmpfs growth otherwise).
-        app_dir = f"{base}/{spark.sparkContext.applicationId}"
-        path = f"{app_dir}/{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(path)
-        if not getattr(spark, "_xidel_ck_cleanup", False):
-            spark._xidel_ck_cleanup = True
-            import atexit
-            import shutil
-
-            atexit.register(shutil.rmtree, app_dir, True)
-        return spark.read.parquet(path)
     ck = df.localCheckpoint(eager=eager)
     jdf = ck._jdf
     new_jdf = spark._jsparkSession.internalCreateDataFrame(
