@@ -113,8 +113,8 @@ def test_canonicalize_is_arrow_vectorized(spark):
 
 
 def test_bloom_probe_plan_is_broadcast_only(spark):
-    """the broadcast-regime bloom probe must be k hash lookups in one
-    codegen stage: every Exchange a BroadcastExchange, no Python, no
+    """the broadcast-regime bloom probe must be ONE hash lookup (all k bits
+    live in one block): every Exchange a BroadcastExchange, no Python, no
     shuffle of the candidates."""
     from xidel_spark.crawl.bloom import build_bloom, flag_candidates
 
@@ -125,8 +125,34 @@ def test_bloom_probe_plan_is_broadcast_only(spark):
     assert "Exchange SinglePartition" not in plan
     n_exchanges = plan.count("Exchange") - plan.count("BroadcastExchange") - plan.count("ReusedExchange")
     assert n_exchanges <= 0, plan[:2000]
+    assert plan.count("BroadcastHashJoin") == 1, plan[:2000]
     for marker in ("BatchEvalPython", "ArrowEvalPython", "pythonUDF"):
         assert marker not in plan
+
+
+def test_bloom_distributed_probe_hash_hint_is_bounded(spark, monkeypatch):
+    """the distributed probe hints SHUFFLE_HASH only while the per-task
+    hash build stays under HASH_BUILD_MAX_BLOCKS; above it the planner's
+    sort-merge join (which can spill) runs, with the same verdicts."""
+    import xidel_spark.crawl.bloom as bl
+
+    seen = spark.range(2000).select(F.format_string("http://s/%d", "id").alias("url"))
+    bloom = bl.build_bloom(seen, capacity=10_000, n_shards=4)
+    cand = spark.range(0, 4000, 2).select(F.format_string("http://s/%d", "id").alias("url"))
+    monkeypatch.setattr(bl, "BROADCAST_MAX_BITS", 0)
+
+    def probe():
+        flagged = bl.flag_candidates(cand, bloom)
+        plan = flagged._jdf.queryExecution().executedPlan().toString()
+        return plan, {r["url"] for r in flagged.where("__maybe").collect()}
+
+    hinted_plan, hinted = probe()
+    assert "ShuffledHashJoin" in hinted_plan and "SortMergeJoin" not in hinted_plan
+    monkeypatch.setattr(bl, "HASH_BUILD_MAX_BLOCKS", 0)
+    plan, maybe = probe()
+    assert "SortMergeJoin" in plan and "ShuffledHashJoin" not in plan, plan[:2000]
+    assert maybe == hinted
+    assert {f"http://s/{i}" for i in range(0, 2000, 2)} <= maybe  # no false negatives
 
 
 def test_expression_queries_plan_shape(spark):

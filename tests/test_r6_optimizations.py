@@ -8,42 +8,6 @@ it at corpus scale).
 import pytest
 from pyspark.sql import functions as F
 
-import xidel_spark.crawl.bloom as bl
-from xidel_spark.crawl.bloom import build_bloom, flag_candidates
-
-
-def _urls(spark, n, salt=""):
-    return spark.range(n).select(
-        F.format_string(f"http://h%d.test/{salt}%d", F.col("id") % 7, F.col("id")).alias("url")
-    )
-
-
-def test_bloom_shard_first_build_identical(spark):
-    """the r6 shard-first build (repartition (shard,h1,h2) by shard before
-    exploding probe words) must produce the exact word table of the
-    legacy explode-first build — same hashes, same (shard, widx, word)."""
-    seen = _urls(spark, 3000)
-    legacy_thresh = spark.conf.get("xidel.bloom.shardBuildMinRows", None)
-    # force the shard-first path even though the input is small
-    spark.conf.set("xidel.bloom.shardBuildMinRows", "1")
-    try:
-        shard_first = build_bloom(seen, capacity=20_000, n_shards=8, approx_rows=3000)
-    finally:
-        spark.conf.set("xidel.bloom.shardBuildMinRows", "1000000000000")
-    try:
-        legacy = build_bloom(seen, capacity=20_000, n_shards=8, approx_rows=3000)
-    finally:
-        if legacy_thresh is None:
-            spark.conf.unset("xidel.bloom.shardBuildMinRows")
-        else:
-            spark.conf.set("xidel.bloom.shardBuildMinRows", legacy_thresh)
-    assert shard_first.df.exceptAll(legacy.df).count() == 0
-    assert legacy.df.exceptAll(shard_first.df).count() == 0
-    # and the filter still has no false negatives through the probe
-    cand = _urls(spark, 500)  # all seen
-    flagged = flag_candidates(cand, shard_first)
-    assert flagged.where(~F.col("__maybe")).count() == 0
-
 
 def test_minhash_barrier_signatures_match_unshared_form(spark):
     """the shuffle-barrier signature pass must equal the naive unshared

@@ -41,6 +41,28 @@ def test_bloom_no_false_negatives(spark):
     assert definitely_new.count() + maybe.count() == 500
 
 
+def test_bloom_blocked_layout_and_fpr(spark):
+    """all k bits of a url land in ONE 512-bit block row; the blocked
+    layout's false-positive rate stays near the unblocked design point (≤2%
+    at n = capacity, ≤0.2% at half load) with zero false negatives."""
+    one = build_bloom(spark.createDataFrame([("http://x/1",)], "url string"), capacity=1000)
+    (row,) = one.df.collect()
+    assert sum(bin(row[f"w{j}"] % (1 << 64)).count("1") for j in range(8)) == one.k
+
+    def urls(n, tag):
+        url = F.format_string(f"http://h%d.test/{tag}/%d", F.col("id") % 97, "id")
+        return spark.range(n).select(url.alias("url"))
+
+    n = 20_000
+    seen, fresh = urls(n, "seen"), urls(n, "fresh")
+    for capacity, max_fpr in ((n, 0.02), (2 * n, 0.002)):
+        bloom = build_bloom(seen, capacity=capacity, n_shards=4)
+        new_seen, _ = split_candidates(seen, bloom)
+        assert new_seen.count() == 0  # no false negatives
+        _, maybe_fresh = split_candidates(fresh, bloom)
+        assert maybe_fresh.count() / n <= max_fpr
+
+
 def test_bloom_merge_and_distributed_probe(spark):
     """incremental OR-merge keeps the no-false-drop guarantee, and the
     DISTRIBUTED (non-broadcast) probe path gives identical verdicts."""
@@ -89,7 +111,7 @@ def test_crawler_matches_engine_seen(spark, cyclic_links):
 
 def test_crawler_bloom_path_equal(spark, cyclic_links):
     plain = FrontierCrawler(spark, cyclic_links).run(SEEDS)
-    bloomed = FrontierCrawler(spark, cyclic_links, use_bloom=True, bloom_shards=4).run(SEEDS)
+    bloomed = FrontierCrawler(spark, cyclic_links, use_bloom=True).run(SEEDS)
     assert {r["url"] for r in plain.seen.collect()} == {r["url"] for r in bloomed.seen.collect()}
     assert [m["enqueued"] for m in plain.metrics] == [m["enqueued"] for m in bloomed.metrics]
 
@@ -209,19 +231,21 @@ def test_bloom_null_url_candidate_not_lost(spark):
             bl.BROADCAST_MAX_BITS = old
 
 
-def test_bloom_auto_mode(spark):
+def test_bloom_auto_mode(spark, monkeypatch):
     """use_bloom='auto' (the default) stays OFF below the break-even and
-    flips ON (sticky) once seen/frontier crosses the configured thresholds;
-    results match the exact-join crawler exactly."""
+    flips ON (sticky) once seen/frontier crosses the thresholds; results
+    match the exact-join crawler exactly. Any other use_bloom is an error."""
+    import xidel_spark.crawl.crawler as crawler_mod
+
     links = fixture_graph(spark)
     ltab = extract_links(links, "//a")
     crawler_exact = FrontierCrawler(spark, ltab, use_bloom=False)
     run_exact = crawler_exact.run(SEEDS)
 
     # tiny thresholds so the fixture crawl crosses break-even at wave 1
-    spark.conf.set("xidel.crawl.bloomAutoMinSeen", "1")
-    spark.conf.set("xidel.crawl.bloomAutoMinRatio", "1")
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(crawler_mod, "BLOOM_AUTO_MIN_SEEN", 1)
+        mp.setattr(crawler_mod, "BLOOM_AUTO_MIN_RATIO", 1)
         crawler_auto = FrontierCrawler(spark, ltab, use_bloom="auto")
         run_auto = crawler_auto.run(SEEDS)
         assert crawler_auto._bloom_active  # flipped on
@@ -231,9 +255,8 @@ def test_bloom_auto_mode(spark):
         assert [m["enqueued"] for m in run_auto.metrics] == [
             m["enqueued"] for m in run_exact.metrics
         ]
-    finally:
-        spark.conf.unset("xidel.crawl.bloomAutoMinSeen")
-        spark.conf.unset("xidel.crawl.bloomAutoMinRatio")
+    with pytest.raises(ValueError, match="use_bloom"):
+        FrontierCrawler(spark, ltab, use_bloom="on")
     # default thresholds: fixture-scale crawls never activate the filter
     crawler_def = FrontierCrawler(spark, ltab)
     run_def = crawler_def.run(SEEDS)

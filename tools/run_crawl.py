@@ -27,7 +27,7 @@ def main() -> None:
     ap.add_argument("--store", help="checkpoint root (resume if manifests exist)")
     ap.add_argument("--max-depth", type=int, default=1 << 30)
     ap.add_argument("--wait-ms", type=int, default=0)
-    ap.add_argument("--bloom", action="store_true")
+    ap.add_argument("--bloom", action="store_true", help="Bloom pre-filter on from wave 1 (default: auto)")
     ap.add_argument("--robots", help="parquet of (host, prefix, allow)")
     ap.add_argument("--demo", action="store_true", help="run the sf0.001 synthetic corpus")
     args = ap.parse_args()
@@ -59,7 +59,7 @@ def main() -> None:
         robots_rules=spark.read.parquet(args.robots) if args.robots else None,
         wait_ms=args.wait_ms,
         max_depth=args.max_depth,
-        use_bloom=args.bloom,
+        use_bloom=True if args.bloom else "auto",
     )
     run = crawler.run(seeds)
     print(json.dumps({"waves": run.waves, "seen": run.seen.count(), "metrics": run.metrics}))

@@ -1,104 +1,105 @@
 """Partitioned blocked-Bloom URL-seen filter — DataFrame-native.
 
 The reference's seen set is an O(n)-scan list (containsEqual,
-xidelbase.pas:1537-1544) — fine for a CLI, hopeless at 10^10 URLs. The
-north rule replaces it with a sharded Bloom filter in front of the exact
-seen table:
+xidelbase.pas:1537-1544), hopeless at 10^10 URLs. The north rule puts a
+sharded Bloom filter in front of the exact seen table, which stays ground
+truth: definitely-new candidates skip the expensive anti-join and only
+"maybe seen" ones are exactly checked, so there are no false drops.
 
-- the EXACT `seen` table remains ground truth (no false drops, ever);
-- the Bloom filter is a pre-filter that lets definitely-new candidates
-  skip the expensive anti-join: only "maybe seen" candidates (a small
-  fraction once the crawl matures) are exactly checked.
+Layout: blocked (Putze, Sanders, Singler, WEA 2007). A url maps to ONE
+(shard, block) address and ONE 512-bit mask holding all k of its bits:
+the build is one narrow row per url, and a probe touches one bucket (the
+layout *Analyzing Vectorized Hash Tables Across CPU Architectures*, VLDB
+2023, finds fastest). The price is a higher false-positive rate than an
+unblocked filter of the same size (~1.3% vs ~1.0% at design load, k=7).
+The filter is a DataFrame of (shard, block, w0..w7) rows, NEVER collected
+to the driver (round 1 re-broadcast a driver-side copy per wave: ~15 GiB
+through one process at 10^10 urls).
 
-Representation: a DataFrame of 64-bit words — (shard, widx, word) — NEVER
-collected to the driver (the round-1 design materialized every shard block
-driver-side and re-broadcast per wave; at the 10^10 target that is ~15 GiB
-through one process). Build is one `bit_or` groupBy (map-side combined);
-merge is union + re-aggregate over BLOOM rows (bounded by m/64, not by
-|seen|); probing joins candidates' k probe words against the word table —
-broadcast when the filter is small enough, a (shard, widx) shuffle join
-otherwise, so the filter scales with executors like any other table.
-
-Sizing: callers pass the OBSERVED seen count (the crawler tracks exact
-per-wave enqueued counts); bits = -n·ln(fpp)/ln²2, k = m/n·ln2
-(FrontierCrawler rebuilds at 4x when the count outgrows capacity).
-
-Double hashing (Kirsch–Mitzenmacher): position_i = h1 + i·h2 (mod m bits)
-with h1/h2 independent-seed xxhash64 columns — all JVM-side.
+Sizing: callers pass the OBSERVED seen count; bits = -n·ln(fpp)/ln²2
+rounded up to whole blocks, k = m/n·ln2. Hashing is JVM-side, with h1/h2
+independent-seed xxhash64 columns: shard = xxhash64(url) mod n_shards,
+block = h1 mod blocks_per_shard, bits (a + i·b) mod 512 for i < k with
+a, b from h2 and b odd — invertible mod 512, so the k bits are distinct.
 """
 
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..util import checkpoint_reset_stats
+from .engine import ROWS_PER_PARTITION, _partitions
 
 _H1_SEED = 0x9E3779B9
 _H2_SEED = 0x85EBCA6B
+BLOCK_BITS = 512
+WORDS = [f"w{j}" for j in range(BLOCK_BITS // 64)]
 
 # filters up to this many total bits take the broadcast probe path
-BROADCAST_MAX_BITS = 1 << 28  # 32 MiB of words
+BROADCAST_MAX_BITS = 1 << 28  # 32 MiB of mask words
+# the distributed probe hints SHUFFLE_HASH only while one task's hash build
+# holds at most this many ~90-byte block rows (~12 MiB, near the 10 MiB per
+# partition Spark accepts for one); above it sort-merge runs, which spills
+HASH_BUILD_MAX_BLOCKS = 1 << 17
 
 
 def _params(capacity: int, fpp: float) -> tuple[int, int]:
-    m_bits = max(64, int(-capacity * math.log(fpp) / (math.log(2) ** 2)))
+    """(blocks, k) for `capacity` urls at false-positive rate `fpp`."""
+    m_bits = max(BLOCK_BITS, int(-capacity * math.log(fpp) / (math.log(2) ** 2)))
     k = max(1, round(m_bits / capacity * math.log(2)))
-    return m_bits, min(k, 12)
+    return -(-m_bits // BLOCK_BITS), min(k, 12)
 
 
+def _address(url: Column, n_shards: int, blocks: int, prefix: str = "") -> list[Column]:
+    """A url's (shard, block, h2) columns, names prefixed; h2 picks its bits."""
+    shard = F.pmod(F.xxhash64(url), F.lit(n_shards)).cast("int")
+    block = F.pmod(F.xxhash64(url, F.lit(_H1_SEED)), F.lit(blocks))
+    h2 = F.xxhash64(url, F.lit(_H2_SEED))
+    return [shard.alias(f"{prefix}shard"), block.alias(f"{prefix}block"), h2.alias(f"{prefix}h2")]
+
+
+def _mask(h2: str, k: int) -> list[str]:
+    """SQL for the mask's eight words, given the url's h2 column (a = its
+    low 9 bits, b = the next 8, made odd). SQL text because the same tree
+    built through the Column API costs one py4j round trip per node (~1 s
+    per build or probe, measured); branch-free because the words as CASE
+    WHENs make a stage too large for the JIT (~15x slower per row)."""
+    bits = [f"((({h2} & 511) + {i} * ((shiftright({h2}, 9) & 511) | 1)) & 511)" for i in range(k)]
+    # a bit's single-bit word, kept only in word j = bit / 64
+    one = "(shiftleft(1L, CAST({p} & 63 AS INT)) * CAST(shiftright({p}, 6) = {j} AS BIGINT))"
+    return [" | ".join(one.format(p=p, j=j) for p in bits) for j in range(len(WORDS))]
+
+
+def _or_blocks(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("shard", "block").agg(*[F.bit_or(w).alias(w) for w in WORDS])
+
+
+@dataclass
 class ShardedBloom:
-    """(shard, widx, word) DataFrame + hash parameters."""
+    """(shard, block, w0..w7) DataFrame + hash parameters."""
 
-    def __init__(
-        self, df: DataFrame, n_shards: int, m_bits_per_shard: int, k: int, capacity: int
-    ):
-        self.df = df
-        self.n_shards = n_shards
-        self.m_bits = m_bits_per_shard
-        self.k = k
-        self.capacity = capacity
-
-    @property
-    def total_bits(self) -> int:
-        return self.m_bits * self.n_shards
+    df: DataFrame
+    n_shards: int
+    blocks_per_shard: int
+    k: int
+    capacity: int
+    partitions: int = 0  # of the hash-partitioned cache; 0 when checkpointed
 
     def merge(self, other: "ShardedBloom", *, eager: bool = True) -> "ShardedBloom":
-        """OR-merge word tables (incremental build: per wave only the NEW
+        """OR-merge block tables (incremental build: per wave only the NEW
         urls are hashed; cost is bounded by filter size, not |seen|)."""
-        assert (self.n_shards, self.m_bits, self.k) == (
-            other.n_shards, other.m_bits, other.k,
+        assert (self.n_shards, self.blocks_per_shard, self.k) == (
+            other.n_shards, other.blocks_per_shard, other.k,
         ), "bloom parameter mismatch"
-        merged = checkpoint_reset_stats(
-            self.df.unionByName(other.df)
-            .groupBy("shard", "widx")
-            .agg(F.bit_or("word").alias("word")),
-            eager=eager,
-        )
-        return ShardedBloom(merged, self.n_shards, self.m_bits, self.k, self.capacity)
+        merged = checkpoint_reset_stats(_or_blocks(self.df.unionByName(other.df)), eager=eager)
+        return ShardedBloom(merged, self.n_shards, self.blocks_per_shard, self.k, self.capacity)
 
     def unpersist(self) -> None:
         self.df.unpersist()
-
-
-def _probe_words(url_col, m_bits: int, k: int, n_shards: int):
-    """(shard, array<struct<widx, mask>>) probe positions for a url."""
-    # reduce mod m BEFORE combining: raw xxhash64 sums overflow ANSI longs;
-    # i*h2m + h1m stays < (k+1)*m, far inside long range at any capacity
-    h1 = F.pmod(F.xxhash64(url_col, F.lit(_H1_SEED)), F.lit(m_bits))
-    h2 = F.pmod(F.xxhash64(url_col, F.lit(_H2_SEED)), F.lit(m_bits)).bitwiseOR(F.lit(1))
-    shard = F.pmod(F.xxhash64(url_col), F.lit(n_shards)).cast("int")
-    probes = F.array(
-        *[
-            F.struct(
-                F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)).alias("bit"),
-            )
-            for i in range(k)
-        ]
-    )
-    return shard, probes
 
 
 def build_bloom(
@@ -112,167 +113,68 @@ def build_bloom(
     partitioned_cache: bool = False,
     approx_rows: int | None = None,
 ) -> ShardedBloom:
-    """seen urls → word table via explode + bit_or groupBy (one shuffle of
-    k small rows per url with map-side combine; nothing driver-side).
-
-    Large inputs (approx_rows unknown or above the conf threshold) are
-    first REPARTITIONED BY SHARD as (shard, h1, h2) triples — 3 longs per
-    url instead of k exploded probe rows. Without this the groupBy's
-    map-side combine is useless (every map task sees every shard, so
-    distinct (shard, widx) groups per task ≈ input rows per task — measured
-    r6: the 20M-url/64-shard build shuffled ~140M probe rows, 18.5 s);
-    with shards co-located each task covers only its shards' m/64 word
-    slots, partial aggregation reduces ~20×, and the url strings never
-    shuffle at all (guide §2.3/§2.5: shuffle a narrow proxy, aggregate
-    where the groups live). Callers that know the input is small (the
-    crawler's per-wave incremental merges) pass approx_rows to skip the
-    extra exchange.
-
-    partitioned_cache=True persists the word table hash-partitioned on
-    (shard, widx): the distributed probe join then reshuffles only the
-    candidates' probe rows, never the filter — the right resident form for
-    a long-lived filter probed every wave. The default (checkpoint) form
-    is for the incremental-merge chain, whose per-wave re-aggregation
-    wants the cheap block representation."""
-    m_bits, k = _params(max(1, capacity) // n_shards + 1, fpp)
-    shard, probes = _probe_words(F.col(url_col), m_bits, k, n_shards)
-    spark = seen.sparkSession
-    shard_first_min = int(spark.conf.get("xidel.bloom.shardBuildMinRows", "2000000"))
-    if approx_rows is None or approx_rows >= shard_first_min:
-        h1 = F.pmod(F.xxhash64(F.col(url_col), F.lit(_H1_SEED)), F.lit(m_bits))
-        h2 = F.pmod(
-            F.xxhash64(F.col(url_col), F.lit(_H2_SEED)), F.lit(m_bits)
-        ).bitwiseOR(F.lit(1))
-        hashed = seen.select(
-            shard.alias("shard"), h1.alias("h1"), h2.alias("h2")
-        ).repartition(F.col("shard"))
-        h1c, h2c = F.col("h1"), F.col("h2")
-        bit = F.explode(
-            F.array(*[F.pmod(h1c + F.lit(i) * h2c, F.lit(m_bits)) for i in range(k)])
-        )
-        bits = hashed.select("shard", bit.alias("bit")).select(
-            "shard",
-            (F.col("bit") / 64).cast("long").alias("widx"),
-            F.expr("shiftleft(1L, CAST(bit % 64 AS INT))").alias("word"),
-        )
-    else:
-        bits = seen.select(shard.alias("shard"), F.explode(probes).alias("p")).select(
-            "shard",
-            (F.col("p.bit") / 64).cast("long").alias("widx"),
-            F.expr("shiftleft(1L, CAST(p.bit % 64 AS INT))").alias("word"),
-        )
-    agg = bits.groupBy("shard", "widx").agg(F.bit_or("word").alias("word"))
-    if partitioned_cache:
-        df = agg.repartition(max(n_shards, 32), "shard", "widx").persist()
-        df.count()
-    else:
-        df = checkpoint_reset_stats(agg, eager=eager)
-    return ShardedBloom(df, n_shards, m_bits, k, capacity)
+    """seen urls → block table. Narrow (shard, block, h2) rows are
+    REPARTITIONED BY SHARD, sized by `approx_rows` when given, before the
+    masks are derived: url strings never shuffle, and the bit_or groupBy
+    needs no second exchange and combines well map-side (guide §2.3/§2.5).
+    partitioned_cache=True persists the table hash-partitioned on (shard,
+    block), so a distributed probe reshuffles only the candidates — the
+    resident form for a long-lived filter; the checkpoint form suits the
+    incremental merges."""
+    blocks, k = _params(max(1, capacity) // n_shards + 1, fpp)
+    base = int(seen.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # hashing on shard leaves every partition past n_shards empty
+    parts = min(n_shards, base if approx_rows is None else _partitions(base, approx_rows))
+    df = _or_blocks(
+        seen.select(*_address(F.col(url_col), n_shards, blocks))
+        .repartition(parts, "shard")
+        .select("shard", "block", *[F.expr(m).alias(w) for w, m in zip(WORDS, _mask("h2", k))])
+    )
+    if not partitioned_cache:
+        return ShardedBloom(checkpoint_reset_stats(df, eager=eager), n_shards, blocks, k, capacity)
+    # at least the session's shuffle partitions, or the probe join would
+    # reshuffle the filter to match the candidates' exchange
+    n_parts = max(base, -(-n_shards * blocks // ROWS_PER_PARTITION))
+    df = df.repartition(n_parts, "shard", "block").persist()
+    df.count()
+    return ShardedBloom(df, n_shards, blocks, k, capacity, n_parts)
 
 
 def flag_candidates(
     candidates: DataFrame, bloom: ShardedBloom, url_col: str = "url"
 ) -> DataFrame:
-    """candidates + a `__maybe` boolean.
-
-    Broadcast regime (filter ≤ BROADCAST_MAX_BITS): k chained broadcast
-    hash lookups — one codegen stage, no explode, no groupBy, no re-join
-    of the candidate payload; the word table's broadcast exchange is built
-    once and reused across the k joins. Large-filter regime: explode the k
-    probes, shuffle-join by (shard, widx), AND per url — the word table
-    scales out like any other table."""
-    k, m_bits, n_shards = bloom.k, bloom.m_bits, bloom.n_shards
-    shard, probes = _probe_words(F.col(url_col), m_bits, k, n_shards)
-    if bloom.total_bits <= BROADCAST_MAX_BITS:
-        ann = candidates.select(
-            "*",
-            shard.alias("__shard"),
-            *[F.element_at(probes, i + 1)["bit"].alias(f"__b{i}") for i in range(k)],
-        )
-        ann = ann.select(
-            "*",
-            *[(F.col(f"__b{i}") / 64).cast("long").alias(f"__w{i}") for i in range(k)],
-            *[
-                F.expr(f"shiftleft(1L, CAST(__b{i} % 64 AS INT))").alias(f"__m{i}")
-                for i in range(k)
-            ],
-        )
-        cur = ann
-        conds = []
-        for i in range(k):
-            # identical projection every join → ONE broadcast exchange,
-            # reused k times (per-join aliasing would rebuild the ~100s-MB
-            # hash relation k times over)
-            w = bloom.df.alias(f"__bl{i}")
-            cur = (
-                cur.join(
-                    F.broadcast(w),
-                    (cur["__shard"] == F.col(f"__bl{i}.shard"))
-                    & (cur[f"__w{i}"] == F.col(f"__bl{i}.widx")),
-                    "left",
-                )
-                .withColumnRenamed("word", f"__word{i}")
-                .drop("shard", "widx")
-            )
-            conds.append(
-                F.col(f"__word{i}").isNotNull()
-                & (F.col(f"__word{i}").bitwiseAND(F.col(f"__m{i}")) == F.col(f"__m{i}"))
-            )
-        maybe = conds[0]
-        for c in conds[1:]:
-            maybe = maybe & c
-        # NULL url probes nothing — route it to the maybe/exact-check side
-        # so both probe regimes agree (distributed path yields NULL→maybe)
-        maybe = F.when(F.col(url_col).isNull(), F.lit(True)).otherwise(maybe)
-        drop = (
-            ["__shard"]
-            + [f"__b{i}" for i in range(k)]
-            + [f"__w{i}" for i in range(k)]
-            + [f"__m{i}" for i in range(k)]
-            + [f"__word{i}" for i in range(k)]
-        )
-        return cur.withColumn("__maybe", maybe).drop(*drop)
-    probe_rows = candidates.select(
-        F.col(url_col).alias("__u"), shard.alias("shard"), F.explode(probes).alias("p")
-    ).select(
-        "__u",
-        "shard",
-        (F.col("p.bit") / 64).cast("long").alias("widx"),
-        F.expr("shiftleft(1L, CAST(p.bit % 64 AS INT))").alias("mask"),
-    )
-    # SHUFFLE_HASH on the word side (r6): the default sort-merge join
-    # re-SORTS the cached word table on every probe (the partitioned cache
-    # is stored unsorted). A per-partition hash build is m/64/n_partitions
-    # words (~1.5 MB at 6M words / 64 partitions) and the persisted
-    # (shard, widx) layout already satisfies the join's distribution, so
-    # only the candidates' probe rows exchange.
-    joined = probe_rows.join(bloom.df.hint("SHUFFLE_HASH"), ["shard", "widx"], "left")
-    hit = (F.col("word").isNotNull()) & (
-        F.col("word").bitwiseAND(F.col("mask")) == F.col("mask")
-    )
-    verdict = (
-        joined.select("__u", hit.alias("__hit"))
-        .groupBy("__u")
-        .agg(F.min("__hit").alias("__maybe"))  # AND over the k probes
-    )
-    return candidates.join(
-        verdict, candidates[url_col] == verdict["__u"], "left"
-    ).drop("__u")
+    """candidates + a `__maybe` boolean from ONE left equi-join on (shard,
+    block): maybe iff every bit of the url's mask is set in its block (a
+    missing row reads as all zeros). The regimes differ only by the join's
+    hint: a filter of at most BROADCAST_MAX_BITS is broadcast, so the
+    candidates never shuffle; a larger one is shuffle-joined."""
+    url = F.col(url_col)
+    probe = candidates.select("*", *_address(url, bloom.n_shards, bloom.blocks_per_shard, "__"))
+    filt = bloom.df.toDF(*[f"__{c}" for c in bloom.df.columns])
+    n_blocks = bloom.n_shards * bloom.blocks_per_shard
+    conf = candidates.sparkSession.conf
+    parts = max(bloom.partitions, int(conf.get("spark.sql.shuffle.partitions")))
+    if n_blocks * BLOCK_BITS <= BROADCAST_MAX_BITS:
+        filt = F.broadcast(filt)
+    elif n_blocks / parts <= HASH_BUILD_MAX_BLOCKS:
+        # the default sort-merge join re-SORTS the cached block table on
+        # every probe (the partitioned cache is stored unsorted)
+        filt = filt.hint("SHUFFLE_HASH")
+    joined = probe.join(filt, ["__shard", "__block"], "left")
+    # all of the mask's bits are set iff no mask bit is missing from the block
+    hit = F.expr("(" + " | ".join(
+        f"(({m}) & ~coalesce(__{w}, 0L))" for w, m in zip(WORDS, _mask("__h2", bloom.k))
+    ) + ") = 0")
+    # a NULL url was never added: route it to the maybe/exact-check side
+    return joined.withColumn("__maybe", url.isNull() | hit).drop("__h2", *filt.columns)
 
 
 def split_candidates(
     candidates: DataFrame, bloom: ShardedBloom, url_col: str = "url"
 ) -> tuple[DataFrame, DataFrame]:
     """(definitely_new, maybe_seen): definitely_new skips the exact
-    anti-join entirely; maybe_seen still gets the exact check (the Bloom
-    can never cause a false drop — a missing word row reads as a miss,
-    which errs toward 'new', and a false positive errs toward the exact
-    check)."""
+    anti-join entirely; maybe_seen still gets the exact check."""
     flagged = flag_candidates(candidates, bloom, url_col)
-    # NULL verdict (e.g. a NULL url never matches the left join in the
-    # distributed probe) must not vanish from both splits — err toward the
-    # exact check so the two probe regimes agree and no row is lost
-    verdict = F.coalesce(F.col("__maybe"), F.lit(True))
-    definitely_new = flagged.where(~verdict).drop("__maybe")
-    maybe_seen = flagged.where(verdict).drop("__maybe")
+    definitely_new = flagged.where(~F.col("__maybe")).drop("__maybe")
+    maybe_seen = flagged.where(F.col("__maybe")).drop("__maybe")
     return definitely_new, maybe_seen

@@ -12,7 +12,6 @@ real catalog on a cluster (`CrawlStateStore` is the only seam):
     root/
       manifests/wave-<n>.json    -- atomic rename commit; highest n wins
       wave=<n>/frontier/*.parquet   -- the wave's NEW urls (seen increment)
-      wave=<n>/bloom/*.parquet      -- optional (shard, block) binary rows
 
 Commits are APPEND-ONLY: each wave writes only its frontier increment; the
 seen set is the union of all committed increments (what Iceberg appends +
@@ -49,20 +48,9 @@ class CrawlStateStore:
     def _wave_dir(self, wave: int) -> Path:
         return self.root / f"wave={wave}"
 
-    def commit(
-        self,
-        wave: int,
-        frontier: DataFrame,
-        metrics: dict,
-        bloom_rows: list | None = None,
-    ) -> dict:
+    def commit(self, wave: int, frontier: DataFrame, metrics: dict) -> dict:
         wd = self._wave_dir(wave)
         frontier.write.mode("overwrite").parquet(str(wd / "frontier"))
-        spark = frontier.sparkSession
-        if bloom_rows:
-            spark.createDataFrame(bloom_rows, "shard long, block binary").write.mode(
-                "overwrite"
-            ).parquet(str(wd / "bloom"))
         lineage = {
             "frontier_files": sorted(p.name for p in (wd / "frontier").glob("*.parquet")),
         }

@@ -6,8 +6,8 @@ One object wires together what the reference does in its recursive loop
 frontier wave → link expansion (engine.expand: frontier ⋈ links, then
 within-wave first-enqueuer resolution) → robots filter (broadcast rule
 join) → Bloom pre-filter → exact anti-join vs seen → politeness-scheduled
-new frontier → checkpoint (frontier + seen + bloom + lineage metrics) →
-next wave.
+new frontier → checkpoint (frontier increment + lineage metrics) → next
+wave.
 
 Ranks give a total, deterministic crawl order (BFS-flavored); the seen SET
 equals the exact engine's whenever depth is unlimited, since both are
@@ -40,6 +40,17 @@ from .checkpoint import CrawlStateStore
 from .engine import BROADCAST_MAX_ROWS, FANOUT_GUESS, UNLIMITED, _seeds_df, _sized_loop, expand
 from .politeness import host_watermark, politeness_schedule
 from .robots import apply_robots
+
+# use_bloom='auto' flips the Bloom pre-filter on once the crawl matures past
+# the measured break-even and keeps it on (build cost amortized by
+# incremental merges). Break-even re-derived from min-of-3 warm legs (r4):
+# probe+amortized-adjudication LOSES below ~20M seen (0.53x at 5M/100k,
+# 0.80x at 1M/100k) and wins 1.5-3.2x at 20M seen / 50k candidates (ratio
+# 400) — the probe cost is ~flat in |seen| while the exact anti-join
+# reshuffles the whole seen side, so the advantage GROWS with crawl
+# maturity (the 10^10-URL design point). Both sit at the measured crossover.
+BLOOM_AUTO_MIN_SEEN = 20_000_000
+BLOOM_AUTO_MIN_RATIO = 200  # seen / frontier
 
 
 @dataclass
@@ -104,8 +115,9 @@ class FrontierCrawler:
         wait_ms: int = 0,
         max_depth: int = UNLIMITED,
         use_bloom: bool | str = "auto",
-        bloom_shards: int = 16,
     ):
+        if not (isinstance(use_bloom, bool) or use_bloom == "auto"):
+            raise ValueError(f"use_bloom must be True, False or 'auto', not {use_bloom!r}")
         self.spark = spark
         self.links = links.select(
             F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst")
@@ -115,28 +127,13 @@ class FrontierCrawler:
         self.wait_ms = wait_ms
         self.max_depth = max_depth
         self.use_bloom = use_bloom
-        self.bloom_shards = bloom_shards
-        # 'auto' flips the Bloom pre-filter on once the crawl matures past
-        # the measured break-even and keeps it on (build cost amortized by
-        # incremental merges). Break-even re-derived from min-of-3 warm legs
-        # (r4): probe+amortized-adjudication LOSES below ~20M seen (0.53x
-        # at 5M/100k, 0.80x at 1M/100k) and wins 1.5-3.2x at 20M seen /
-        # 50k candidates (ratio 400) — the probe cost is ~flat in |seen|
-        # while the exact anti-join reshuffles the whole seen side, so the
-        # advantage GROWS with crawl maturity (the 10^10-URL design point).
-        # Thresholds sit at the measured crossover and are conf-overridable.
         self._bloom_active = use_bloom is True
 
     def _bloom_this_wave(self, seen_count: int, frontier_size: int | None) -> bool:
-        if self.use_bloom is True:
-            return True
-        if self.use_bloom is False or self.use_bloom != "auto":
-            return False
-        if self._bloom_active:
-            return True
-        min_seen = int(self.spark.conf.get("xidel.crawl.bloomAutoMinSeen", "20000000"))
-        min_ratio = int(self.spark.conf.get("xidel.crawl.bloomAutoMinRatio", "200"))
-        if seen_count >= min_seen and seen_count >= min_ratio * max(frontier_size or 1, 1):
+        if self.use_bloom != "auto":
+            return self.use_bloom
+        frontier_rows = max(frontier_size or 1, 1)
+        if seen_count >= BLOOM_AUTO_MIN_SEEN and seen_count >= BLOOM_AUTO_MIN_RATIO * frontier_rows:
             self._bloom_active = True
         return self._bloom_active
 
@@ -186,14 +183,12 @@ class FrontierCrawler:
             grown = build_bloom(
                 seen,
                 capacity=max(1_000_000, 4 * seen_count),
-                n_shards=self.bloom_shards,
                 approx_rows=seen_count,
             )
         else:
             grown = bloom.merge(build_bloom(
                 frontier.select("url"),
                 capacity=bloom.capacity,
-                n_shards=self.bloom_shards,
                 eager=False,
                 approx_rows=last_fresh,
             ))
@@ -300,8 +295,9 @@ class FrontierCrawler:
                 )
                 # slim dedicated checkpoint: what stays alive across waves is
                 # only the increment — the seen union reads these. Stats are
-                # RESET here: the bloom probe's 8 joins would compound
-                # sizeInBytes estimates 8x per wave (see util)
+                # RESET here: the wave's joins (expansion, robots, Bloom
+                # probe, seen) would compound sizeInBytes estimates every
+                # wave (see util)
                 next_frontier = checkpoint_reset_stats(self._schedule(fresh, watermark))
                 got = obs.get
                 n_cand = int(got["n_cand"] or 0)

@@ -66,9 +66,10 @@ def checkpoint_reset_stats(df: DataFrame, eager: bool = True) -> DataFrame:
 
     Spark's LogicalRDD preserves the originating plan's sizeInBytes, and
     join size estimates are PRODUCTS — in an iterative loop the estimate's
-    BigInteger doubles its bit-length per join, so a wave loop with a
-    multi-join stage (the bloom probe has 8) grows an 8^waves-bit number
-    and Catalyst ends up burning minutes in BigInteger.multiply
+    BigInteger doubles its bit-length per join, so a wave loop whose plan
+    chains several joins (a crawler wave joins for expansion, robots, the
+    Bloom probe and the seen check) grows a joins^waves-bit number and
+    Catalyst ends up burning minutes in BigInteger.multiply
     (Karatsuba/ToomCook frames on the py4j thread; measured wave times
     1.5s → 8s → 135s). Rebuilding the DataFrame from the checkpointed
     internal RDD resets stats to the session default and keeps every wave's
