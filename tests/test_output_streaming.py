@@ -81,6 +81,33 @@ def test_streaming_cross_batch_dedup(spark):
     assert sorted(r["url"] for r in cc.seen.collect()) == ["a", "b", "c", "d", "x"]
 
 
+def test_streaming_file_batches_never_reenqueue(spark, tmp_path):
+    """two seed files read one per trigger (maxFilesPerTrigger=1) are two
+    real micro-batches: the second, seeded at x with x→b, enqueues x alone,
+    and no url is enqueued twice across the batches"""
+    import os
+
+    from xidel_spark.streaming.continuous import SEED_SCHEMA, ContinuousCrawl
+
+    links = spark.createDataFrame(
+        [("a", 0, "b"), ("b", 0, "c"), ("c", 0, "d"), ("x", 0, "b")],
+        "src string, idx int, dst string",
+    )
+    seeds_dir = tmp_path / "seeds"
+    seeds_dir.mkdir()
+    for i, seed in enumerate(["a", "x"]):
+        f = seeds_dir / f"b{i}.json"
+        f.write_text(f'{{"url": "{seed}", "seed_idx": 0}}\n')
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))  # the file source reads oldest first
+    cc = ContinuousCrawl(spark, links)
+    stream = spark.readStream.schema(SEED_SCHEMA).option("maxFilesPerTrigger", 1).json(str(seeds_dir))
+    q = stream.writeStream.foreachBatch(cc._process_batch).trigger(availableNow=True).start()
+    q.awaitTermination()
+    assert [b["enqueued"] for b in cc.batches] == [4, 1]
+    seen = [r.url for r in cc.seen.collect()]
+    assert sorted(seen) == ["a", "b", "c", "d", "x"]
+
+
 def test_media_plumbing(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"

@@ -155,6 +155,39 @@ def test_bloom_distributed_probe_hash_hint_is_bounded(spark, monkeypatch):
     assert {f"http://s/{i}" for i in range(0, 2000, 2)} <= maybe  # no false negatives
 
 
+def test_seen_join_hash_hint_is_bounded(spark, monkeypatch):
+    """the crawler's dedup join hints SHUFFLE_HASH only while the expected
+    seen rows per shuffle partition stay under HASH_BUILD_MAX_ROWS; above it
+    the planner's sort-merge join (which can spill) runs, same crawl"""
+    import xidel_spark.crawl.crawler as crawler_mod
+
+    rows = [(f"http://h{i % 3}.test/p/{i}", k, f"http://h{(2 * i + k + 1) % 30 % 3}.test/p/{(2 * i + k + 1) % 30}")
+            for i in range(30) for k in range(2)]
+    links = spark.createDataFrame(rows, "src string, idx int, dst string")
+    real = crawler_mod.checkpoint_reset_stats
+
+    def crawl():
+        plans = []
+
+        def capture(df, *a, **k):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return real(df, *a, **k)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(crawler_mod, "checkpoint_reset_stats", capture)
+            run = crawler_mod.FrontierCrawler(spark, links).run(["http://h0.test/p/0"])
+        return plans[1:], sorted(r.url for r in run.seen.collect())  # waves >= 1
+
+    hinted_plans, hinted = crawl()
+    assert hinted_plans and all(
+        "ShuffledHashJoin" in p and "SortMergeJoin" not in p for p in hinted_plans
+    )
+    monkeypatch.setattr(crawler_mod, "HASH_BUILD_MAX_ROWS", 0)
+    plans, seen = crawl()
+    assert all("SortMergeJoin" in p and "ShuffledHashJoin" not in p for p in plans), plans[0][:2000]
+    assert seen == hinted
+
+
 def test_expression_queries_plan_shape(spark):
     """round-3 gated queries: zero Python nodes, zero exchanges (pure
     per-row Catalyst), and column-pruned parquet scans."""

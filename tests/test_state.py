@@ -191,6 +191,29 @@ def test_robots_disallow_all_is_deterministic(spark):
     assert out.where("allowed").count() == 0
 
 
+def test_robots_urls_without_path(spark):
+    """the authority ends at '/', '?' or '#' and an empty path is '/'
+    (RFC 9309 §2.2.2): 'Disallow: /' blocks http://h.test and
+    http://h.test?q=1, and 'Disallow: /x' does not block http://h.test?q=/x"""
+    from xidel_spark.crawl.robots import apply_robots
+
+    rules = spark.createDataFrame(
+        [("h.test", "/", False), ("g.test", "/x", False)],
+        "host string, prefix string, allow boolean",
+    )
+    cand = spark.createDataFrame(
+        [("http://h.test",), ("http://h.test?q=1",), ("http://g.test?q=/x",), ("http://g.test/x/1",)],
+        "url string",
+    )
+    got = {r.url: r.allowed for r in apply_robots(cand, rules).collect()}
+    assert got == {
+        "http://h.test": False,
+        "http://h.test?q=1": False,
+        "http://g.test?q=/x": True,
+        "http://g.test/x/1": False,
+    }
+
+
 def test_torn_wave_is_invisible(spark, cyclic_links, tmp_path):
     """snapshot isolation: a crash AFTER data files land but BEFORE the
     manifest commit must leave the store at the previous wave."""

@@ -19,6 +19,12 @@ snapshot manifests give for free). A manifest records row counts,
 per-partition file lineage and the wave's dedup metrics. An interrupted
 wave (data written, manifest missing) is invisible on load — snapshot
 isolation.
+
+A resume reads the store ONCE: one multi-path parquet read of every
+committed increment (one schema-inference job), `wave` recovered from the
+directory names. `mergeSchema` unions the increments' columns, so a wave
+committed without a politeness wait reads NULL `scheduled_ms`. Seen, the
+latest frontier and the resume watermark all come from that read.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -38,6 +45,7 @@ class Snapshot:
     frontier: DataFrame  # latest wave's increment
     seen: DataFrame      # union of all committed increments
     manifest: dict
+    rows: DataFrame      # every committed increment's rows, plus `wave`
 
 
 class CrawlStateStore:
@@ -51,15 +59,9 @@ class CrawlStateStore:
     def commit(self, wave: int, frontier: DataFrame, metrics: dict) -> dict:
         wd = self._wave_dir(wave)
         frontier.write.mode("overwrite").parquet(str(wd / "frontier"))
-        lineage = {
-            "frontier_files": sorted(p.name for p in (wd / "frontier").glob("*.parquet")),
-        }
-        manifest = {
-            "wave": wave,
-            "metrics": metrics,
-            "lineage": lineage,
-            "frontier_rows": frontier.count(),
-        }
+        lineage = {"frontier_files": sorted(p.name for p in (wd / "frontier").glob("*.parquet"))}
+        manifest = {"wave": wave, "metrics": metrics, "lineage": lineage,
+                    "frontier_rows": frontier.count()}
         # atomic commit: write-then-rename; readers never see a partial wave
         fd, tmp = tempfile.mkstemp(dir=self.root / "manifests", suffix=".tmp")
         with os.fdopen(fd, "w") as f:
@@ -68,11 +70,13 @@ class CrawlStateStore:
         return manifest
 
     def latest(self) -> int | None:
-        waves = [
-            int(p.stem.split("-")[1])
-            for p in (self.root / "manifests").glob("wave-*.json")
-        ]
+        waves = [int(p.stem.split("-")[1]) for p in (self.root / "manifests").glob("wave-*.json")]
         return max(waves) if waves else None
+
+    def _read(self, spark: SparkSession, wave: int) -> DataFrame:
+        """Increments 0..wave in one read, tagged with their `wave`."""
+        paths = [str(self._wave_dir(w) / "frontier") for w in range(wave + 1)]
+        return spark.read.options(basePath=str(self.root), mergeSchema="true").parquet(*paths)
 
     def load(self, spark: SparkSession, wave: int | None = None) -> Snapshot | None:
         wave = self.latest() if wave is None else wave
@@ -80,30 +84,20 @@ class CrawlStateStore:
             return None
         with open(self.root / "manifests" / f"wave-{wave}.json") as f:
             manifest = json.load(f)
-        frontier = spark.read.parquet(str(self._wave_dir(wave) / "frontier"))
-        increments = [
-            spark.read.parquet(str(self._wave_dir(w) / "frontier")).select("url")
-            for w in range(wave + 1)
-        ]
-        seen = increments[0]
-        for inc in increments[1:]:
-            seen = seen.unionByName(inc)
-        return Snapshot(wave=wave, frontier=frontier, seen=seen, manifest=manifest)
+        rows = self._read(spark, wave)
+        frontier = rows.where(F.col("wave") == wave).drop("wave")
+        return Snapshot(wave=wave, frontier=frontier, seen=rows.select("url"),
+                        manifest=manifest, rows=rows)
 
     def increments(self, spark: SparkSession, wave: int | None = None) -> list[DataFrame]:
-        """Full-column frontier increments for every committed wave — used on
-        resume to rebuild derived per-host state (politeness watermarks)."""
+        """Full-column frontier increments for every committed wave, from
+        one read (so all share the merged columns)."""
         wave = self.latest() if wave is None else wave
         if wave is None:
             return []
-        return [
-            spark.read.parquet(str(self._wave_dir(w) / "frontier"))
-            for w in range(wave + 1)
-        ]
+        rows = self._read(spark, wave)
+        return [rows.where(F.col("wave") == w).drop("wave") for w in range(wave + 1)]
 
     def manifests(self) -> list[dict]:
-        out = []
-        for p in sorted((self.root / "manifests").glob("wave-*.json")):
-            with open(p) as f:
-                out.append(json.load(f))
+        out = [json.loads(p.read_text()) for p in (self.root / "manifests").glob("wave-*.json")]
         return sorted(out, key=lambda m: m["wave"])

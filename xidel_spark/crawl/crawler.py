@@ -4,10 +4,19 @@ One object wires together what the reference does in its recursive loop
 (xidelbase.pas:1996-2137) plus the north rule's scale transplants:
 
 frontier wave → link expansion (engine.expand: frontier ⋈ links, then
-within-wave first-enqueuer resolution) → robots filter (broadcast rule
-join) → Bloom pre-filter → exact anti-join vs seen → politeness-scheduled
-new frontier → checkpoint (frontier increment + lineage metrics) → next
-wave.
+within-wave first-enqueuer resolution) → robots flag (broadcast rule
+join) → Bloom flag → exact left-join vs seen (maybe-seen rows only) →
+politeness-scheduled new frontier → checkpoint (frontier increment +
+lineage metrics) → next wave.
+
+One Spark job per wave does the row work: robots, Bloom, dedup and
+politeness are one plan, materialized once, and every wave count
+(candidates, robots-blocked, duplicates) rides that job as an
+Observation. What a wave still runs besides it is small and fixed: the
+broadcast builds (frontier, robots rules, Bloom filter, watermark), the
+Bloom build or incremental merge, the per-host watermark fold and, with a
+store, the commit (parquet write + row count). The seed wave takes the
+same path.
 
 Ranks give a total, deterministic crawl order (BFS-flavored); the seen SET
 equals the exact engine's whenever depth is unlimited, since both are
@@ -15,12 +24,13 @@ reachability.
 
 Partitioning: with politeness on, the frontier is hash-partitioned by host
 (politeness bucket == shuffle partition); candidates shuffle once on url
-for the dedup aggregate, and the anti-join's seen side is partitioned the
+for the dedup aggregate, and the dedup join's seen side is partitioned the
 same way.
 
 Resume: constructing a crawler over a store with committed waves continues
 from the latest snapshot; a crawl killed mid-wave re-runs only that wave
-(snapshot isolation via atomic manifests).
+(snapshot isolation via atomic manifests). The store is read once: seen,
+the latest frontier and the politeness watermark come from one read.
 """
 
 from __future__ import annotations
@@ -35,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..urlnorm import host_of
 from ..util import checkpoint_reset_stats
-from .bloom import ShardedBloom, build_bloom, split_candidates
+from .bloom import ShardedBloom, build_bloom, flag_candidates
 from .checkpoint import CrawlStateStore
 from .engine import BROADCAST_MAX_ROWS, FANOUT_GUESS, UNLIMITED, _seeds_df, _sized_loop, expand
 from .politeness import host_watermark, politeness_schedule
@@ -51,6 +61,11 @@ from .robots import apply_robots
 # maturity (the 10^10-URL design point). Both sit at the measured crossover.
 BLOOM_AUTO_MIN_SEEN = 20_000_000
 BLOOM_AUTO_MIN_RATIO = 200  # seen / frontier
+# the dedup join hints SHUFFLE_HASH only while one task's hash build holds
+# at most this many seen urls (~12 MiB at ~90 bytes a row, near the 10 MiB
+# per partition Spark accepts for one); above it sort-merge runs, which
+# spills
+HASH_BUILD_MAX_ROWS = 1 << 17
 
 
 @dataclass
@@ -65,21 +80,19 @@ class CrawlRun:
     def visited(self) -> DataFrame:
         """(url, rank, depth) of every enqueued url, one row each: the union
         of the checkpointed frontier increments (the store's on resume)."""
-        return reduce(
-            DataFrame.unionByName,
-            [inc.select("url", "rank", "depth") for inc in self.increments()],
-        )
+        return reduce(DataFrame.unionByName, [i.select("url", "rank", "depth") for i in self.increments()])
 
 
-def _seen_side(seen: DataFrame, static: bool) -> DataFrame:
-    """seen table prepared for the per-wave dedup left-join. On
+def _seen_side(seen: DataFrame, static: bool, rows: int) -> DataFrame:
+    """seen (`__seen` = url) prepared for the per-wave dedup left-join. On
     statically-planned waves (AQE off) the planner would pick a sort-merge
     join — sorting the whole seen side every wave — so the join is hinted
-    SHUFFLE_HASH: per-partition builds are bounded by the wave sizing
-    (~ROWS_PER_PARTITION entries). Big AQE waves are left to the runtime
+    SHUFFLE_HASH while the `rows` expected seen urls per shuffle partition
+    stay under HASH_BUILD_MAX_ROWS. Big AQE waves are left to the runtime
     SMJ→SHJ conversion, which checks actual sizes."""
-    side = seen.withColumn("__seen", F.lit(True))
-    return side.hint("SHUFFLE_HASH") if static else side
+    side = seen.select(F.col("url").alias("__seen"))
+    parts = int(seen.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return side.hint("SHUFFLE_HASH") if static and rows <= HASH_BUILD_MAX_ROWS * parts else side
 
 
 def _expected_rows(metrics: list[dict], seen_base: int) -> int:
@@ -119,9 +132,7 @@ class FrontierCrawler:
         if not (isinstance(use_bloom, bool) or use_bloom == "auto"):
             raise ValueError(f"use_bloom must be True, False or 'auto', not {use_bloom!r}")
         self.spark = spark
-        self.links = links.select(
-            F.col("src"), F.col("idx").cast("int").alias("idx"), F.col("dst")
-        )
+        self.links = links.select("src", F.col("idx").cast("int").alias("idx"), "dst")
         self.store = store
         self.robots_rules = robots_rules
         self.wait_ms = wait_ms
@@ -137,16 +148,46 @@ class FrontierCrawler:
             self._bloom_active = True
         return self._bloom_active
 
-    def _filter_robots(self, cand: DataFrame) -> tuple[DataFrame, int]:
+    def _next_frontier(
+        self, cand: DataFrame, seen_side: DataFrame | None, watermark: DataFrame | None,
+        wave: int, bloom: ShardedBloom | None = None,
+    ) -> tuple[DataFrame, dict]:
+        """The wave's one job: candidates (url, rank, depth) → robots flag →
+        Bloom flag → left-join vs seen → politeness schedule → checkpoint.
+        `seen_side` is _seen_side's frame, or None without a dup list.
+        Returns the new frontier and the wave's counts (n_blocked, n_cand
+        = allowed candidates, n_dup = allowed ones already seen), which
+        ride the checkpoint as an Observation — no extra count jobs."""
         if self.robots_rules is None:
-            return cand, 0
-        cand = cand.localCheckpoint(eager=True)
-        flags = apply_robots(cand.select("url"), self.robots_rules)
-        kept = cand.join(
-            flags.where("allowed").select("url"), "url", "inner"
-        ).localCheckpoint(eager=True)
-        blocked = cand.count() - kept.count()
-        return kept, blocked
+            cand = cand.withColumn("allowed", F.lit(True))
+        else:
+            # keeps the candidate columns; its longest-prefix window reuses
+            # the url partitioning of the expansion's aggregate
+            cand = apply_robots(cand, self.robots_rules)
+        if seen_side is None:
+            joined = cand.withColumn("__seen", F.lit(None).cast("string"))
+        else:
+            on = F.col("url") == F.col("__seen")
+            if bloom is not None:
+                # one pass: definitely-new rows never match the seen side,
+                # maybe-seen ones get the exact check (no false drops)
+                cand = flag_candidates(cand, bloom)
+                on = on & F.col("__maybe")
+            joined = cand.join(seen_side, on, "left")
+        allowed, dup = F.col("allowed"), F.col("__seen").isNotNull()
+        obs = Observation(f"crawl_w{wave}")
+        fresh = joined.observe(
+            obs,
+            F.sum((~allowed).cast("long")).alias("n_blocked"),
+            F.sum(allowed.cast("long")).alias("n_cand"),
+            F.sum((allowed & dup).cast("long")).alias("n_dup"),
+        ).where(allowed & ~dup).select("url", "rank", "depth")
+        # slim dedicated checkpoint: what stays alive across waves is only
+        # the increment — the seen union reads these. Stats are RESET here:
+        # the wave's joins (expansion, robots, Bloom probe, seen) would
+        # compound sizeInBytes estimates every wave (see util)
+        frontier = checkpoint_reset_stats(self._schedule(fresh, watermark))
+        return frontier, {k: int(v or 0) for k, v in obs.get.items()}
 
     def _schedule(self, frontier: DataFrame, watermark: DataFrame | None) -> DataFrame:
         """Adds the host bucket. With politeness on: the earliest allowed
@@ -158,9 +199,7 @@ class FrontierCrawler:
         nodes)."""
         if self.wait_ms <= 0:
             return frontier.withColumn("host", host_of(F.col("url")))
-        return politeness_schedule(
-            frontier, wait_ms=self.wait_ms, watermark=watermark
-        ).repartition(F.col("host"))
+        return politeness_schedule(frontier, self.wait_ms, watermark=watermark).repartition("host")
 
     def _watermark(self, frontier: DataFrame, prev: DataFrame | None) -> DataFrame | None:
         """Per-host last scheduled fetch, carried ACROSS waves."""
@@ -180,32 +219,23 @@ class FrontierCrawler:
         INCREMENTALLY: only the previous wave's fresh urls are hashed and
         OR-merged — O(increment + filter), never O(seen)."""
         if bloom is None or seen_count > 0.7 * bloom.capacity:
-            grown = build_bloom(
-                seen,
-                capacity=max(1_000_000, 4 * seen_count),
-                approx_rows=seen_count,
-            )
+            grown = build_bloom(seen, capacity=max(1_000_000, 4 * seen_count), approx_rows=seen_count)
         else:
             grown = bloom.merge(build_bloom(
-                frontier.select("url"),
-                capacity=bloom.capacity,
-                eager=False,
-                approx_rows=last_fresh,
+                frontier.select("url"), capacity=bloom.capacity, eager=False, approx_rows=last_fresh
             ))
         if bloom is not None:
             bloom.unpersist()
         return grown
 
     def _seed_wave(self, seeds, prior_seen: DataFrame | None):
-        frontier = _seeds_df(self.spark, seeds, dedup=True)
-        if prior_seen is not None:
-            frontier = frontier.join(prior_seen, "url", "left_anti")
-        frontier, blocked = self._filter_robots(frontier)
-        # seeds are fetches too: schedule wave 0 so the cross-wave
-        # watermark starts at the seeds' last per-host fetch
-        frontier = checkpoint_reset_stats(self._schedule(frontier, None))
-        m = {"wave": 0, "candidates": 0, "deduped": 0, "robots_blocked": blocked,
-             "enqueued": frontier.count()}
+        # seeds are fetches too: they take the wave path, so wave 0 is
+        # robots-checked, deduped against the prior dup list and scheduled
+        # (the cross-wave watermark starts at the seeds' last per-host fetch)
+        side = None if prior_seen is None else _seen_side(prior_seen, False, 0)
+        frontier, n = self._next_frontier(_seeds_df(self.spark, seeds, dedup=True), side, None, 0)
+        m = {"wave": 0, "candidates": 0, "deduped": 0, "robots_blocked": n["n_blocked"],
+             "enqueued": n["n_cand"] - n["n_dup"]}
         watermark = self._watermark(frontier, None)
         if self.store:
             self.store.commit(0, frontier, m)
@@ -215,21 +245,16 @@ class FrontierCrawler:
         return frontier, seen, [m], watermark
 
     def _resume(self, snap):
-        frontier = snap.frontier.localCheckpoint(eager=True)
         metrics = [m["metrics"] for m in self.store.manifests()]
         watermark = None
-        if self.wait_ms > 0:
-            # rebuild the politeness watermark from committed waves so
-            # the >= wait spacing survives a kill/resume boundary
-            for inc in self.store.increments(self.spark, snap.wave):
-                if "scheduled_ms" in inc.columns:
-                    watermark = host_watermark(
-                        inc.select("host", "scheduled_ms"), watermark
-                    )
-            if watermark is not None:
-                watermark = watermark.localCheckpoint(eager=True)
+        if self.wait_ms > 0 and "scheduled_ms" in snap.rows.columns:
+            # the politeness watermark rebuilt from the committed waves, so
+            # the >= wait spacing survives a kill/resume boundary: one
+            # aggregate over the snapshot's read (waves committed without a
+            # wait read NULL scheduled_ms, which max ignores)
+            watermark = host_watermark(snap.rows.select("host", "scheduled_ms")).localCheckpoint(eager=True)
         # seen = union of committed increments (never rewritten)
-        return frontier, snap.seen, metrics, watermark
+        return snap.frontier, snap.seen, metrics, watermark
 
     def run(
         self,
@@ -268,45 +293,18 @@ class FrontierCrawler:
                     frontier.select("url", "rank", "depth"), self.links,
                     broadcast=last_fresh <= BROADCAST_MAX_ROWS,
                 )
-                cand, robots_blocked = self._filter_robots(cand)
                 seen_count = seen_base + sum(m["enqueued"] for m in metrics)
                 if self._bloom_this_wave(seen_count, last_fresh):
-                    # definitely-new candidates skip the exact join; only
-                    # maybe-seen ones get the flag lookup
                     bloom = self._grow_bloom(bloom, seen, frontier, seen_count, last_fresh)
-                    definitely_new, maybe = split_candidates(cand, bloom)
-                    joined = definitely_new.withColumn(
-                        "__seen", F.lit(None).cast("boolean")
-                    ).unionByName(maybe.join(_seen_side(seen, sizing.static), "url", "left"))
-                else:
-                    joined = cand.join(_seen_side(seen, sizing.static), "url", "left")
-                # ONE job per wave: candidate/dedup counts ride the frontier
-                # checkpoint as an Observation over the pre-filter join rows
-                # — no separate wide checkpoint and no extra count jobs
-                obs = Observation(f"crawl_w{wave}")
-                fresh = (
-                    joined.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n_cand"),
-                        F.sum(F.col("__seen").isNotNull().cast("long")).alias("n_dup"),
-                    )
-                    .where(F.col("__seen").isNull())
-                    .drop("__seen")
+                next_frontier, n = self._next_frontier(
+                    cand, _seen_side(seen, sizing.static, seen_count), watermark, wave, bloom
                 )
-                # slim dedicated checkpoint: what stays alive across waves is
-                # only the increment — the seen union reads these. Stats are
-                # RESET here: the wave's joins (expansion, robots, Bloom
-                # probe, seen) would compound sizeInBytes estimates every
-                # wave (see util)
-                next_frontier = checkpoint_reset_stats(self._schedule(fresh, watermark))
-                got = obs.get
-                n_cand = int(got["n_cand"] or 0)
-                n_fresh = n_cand - int(got["n_dup"] or 0)
+                n_fresh = n["n_cand"] - n["n_dup"]
                 m = {
                     "wave": wave,
-                    "candidates": n_cand,
-                    "deduped": n_cand - n_fresh,
-                    "robots_blocked": robots_blocked,
+                    "candidates": n["n_cand"],
+                    "deduped": n["n_dup"],
+                    "robots_blocked": n["n_blocked"],
                     "enqueued": n_fresh,
                     "wall_s": round(time.time() - wave_t0, 3),
                 }

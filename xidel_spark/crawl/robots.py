@@ -49,32 +49,39 @@ def parse_robots_txt(host: str, text: str, agent: str = "*") -> list[tuple[str, 
 
 
 def path_of(url_col):
-    return F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]+(/[^?#]*)", 1)
+    """The url's path, '/' when it has none (RFC 9309 §2.2.2). The
+    authority ends at the first '/', '?' or '#', as in host_of."""
+    path = F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+(/[^?#]*)?", 1)
+    return F.when(path == "", "/").otherwise(path)
 
 
 def apply_robots(candidates: DataFrame, rules: DataFrame, url_col: str = "url") -> DataFrame:
-    """Filter candidate URLs through a (host, prefix, allow) rule table.
+    """Flag candidate URLs through a (host, prefix, allow) rule table.
 
-    Returns the candidates with an `allowed` flag; crawl integration drops
-    `allowed = false` rows before the fetch stage (dedup-before-fetch and
-    robots-before-fetch both cut network cost, xidelbase.pas:1484-1491
-    analog).
+    Returns the candidates' columns plus an `allowed` flag, one row per
+    url; crawl integration drops `allowed = false` rows before the fetch
+    stage (dedup-before-fetch and robots-before-fetch both cut network
+    cost, xidelbase.pas:1484-1491 analog). The window is partitioned by
+    url, so candidates already hash-partitioned on it need no exchange.
     """
-    cand = candidates.withColumn("__host", host_of(F.col(url_col))).withColumn(
-        "__path", path_of(F.col(url_col))
+    cols = candidates.columns
+    url = F.col(url_col)
+    cand = candidates.withColumn("__host", host_of(url)).withColumn("__path", path_of(url))
+    rules = rules.select(
+        F.col("host").alias("__rhost"), F.col("prefix").alias("__prefix"), F.col("allow").alias("__allow")
     )
     matched = cand.join(
         F.broadcast(rules),
-        (cand["__host"] == rules["host"]) & cand["__path"].startswith(rules["prefix"]),
+        (F.col("__host") == F.col("__rhost")) & F.col("__path").startswith(F.col("__prefix")),
         "left",
     )
     # longest prefix wins; equal lengths tie-break to allow (the de-facto
     # standard: least-restrictive rule wins ties) — fully deterministic
     w = Window.partitionBy(url_col).orderBy(
-        F.length(F.col("prefix")).desc(), F.col("allow").desc()
+        F.length(F.col("__prefix")).desc(), F.col("__allow").desc()
     )
     return (
         matched.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .select(url_col, F.coalesce(F.col("allow"), F.lit(True)).alias("allowed"))
+        .select(*cols, F.coalesce(F.col("__allow"), F.lit(True)).alias("allowed"))
     )
